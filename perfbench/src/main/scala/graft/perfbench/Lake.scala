@@ -94,7 +94,7 @@ object RowPrint {
   * Probing outside the timed ops keeps the collections out of op times;
   * a full collection makes the figure the data the process retained, not
   * how far the young generation happened to fill. */
-final class HeapMeter(everyS: Double = 5.0) {
+final class HeapMeter(sc: org.apache.spark.SparkContext, everyS: Double = 5.0) {
   import java.lang.management.ManagementFactory
 
   private var peak = 0L
@@ -107,8 +107,14 @@ final class HeapMeter(everyS: Double = 5.0) {
         System.gc()
         ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed
       }
-      // collect until the heap stops shrinking: Spark's cleaner releases
-      // blocks of unreachable frames only after a collection finds them
+      // Spark's cleaner drops the cached and checkpointed blocks of
+      // unreachable frames only after a collection finds them, and
+      // asynchronously: wait (up to 2 s) until no RDD blocks remain, then
+      // collect until the heap stops shrinking. Blocks a frame still
+      // holds outlive the wait and count.
+      collect()
+      val deadline = System.nanoTime() + 2000000000L
+      while (sc.getRDDStorageInfo.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
       var prev = Long.MaxValue
       var used = collect()
       var rounds = 1

@@ -64,7 +64,7 @@ object Main {
     val tracer = new Tracer(spark.sparkContext, traced)
     val benchDir = new File(opts("bench")).getAbsolutePath
     val cacheDir = new File(opts("cache")).getAbsolutePath
-    val heap = new HeapMeter
+    val heap = new HeapMeter(spark.sparkContext)
     val ctx = Ctx(spark, seed, seconds, cores, work, outDir, benchDir, cacheDir, tracer, heap)
     if (opts.get("prepare").contains("1")) {
       w.prepare(ctx)
@@ -83,7 +83,8 @@ object Main {
     val endToEnd = Seq(
       ("setup_s", setupS, "s"),
       ("op_p50_s", if (o.opTimes.isEmpty) 0.0 else Stats.median(o.opTimes), "s"),
-      ("ops_per_s", o.opTimes.size / o.measuredS, "1/s"),
+      // per second of op time: the heap probes between ops do not count
+      ("ops_per_s", o.opTimes.size / math.max(1e-9, o.opTimes.sum), "1/s"),
       ("cpu_s_per_op", o.opCpuS / math.max(1, o.opTimes.size), "s"),
       ("peak_heap_mb", heapMb, "MiB"))
     val tail = Stats.tail(o.opTimes)

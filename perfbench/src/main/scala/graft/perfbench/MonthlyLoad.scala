@@ -95,7 +95,7 @@ object MonthlyLoad extends Workload {
         }
       val attempted = r.times.size
       val failed = r.errors.size + badMonths
-      Outcome(if (traced) wallA.toSeq else r.times, r.cpuS.sum, r.wallS, attempted, failed, problems.toSeq, user,
+      Outcome(if (traced) wallA.toSeq else r.times, r.cpuS.sum, attempted, failed, problems.toSeq, user,
         layers ++ Map("run.failed_frac" -> failed.toDouble / math.max(1, attempted)))
     }
   }

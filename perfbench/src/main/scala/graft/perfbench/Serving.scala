@@ -90,7 +90,7 @@ object Serving extends Workload {
                 (if (untracedS.sum == 0) 0.0 else all.map(_.durNs).sum / 1e9 / untracedS.sum - 1),
               "trace.spans_per_op" -> spans.size / n)
         }
-      Outcome(if (ctx.traced) untracedS.toSeq else r.times, r.cpuS.sum, r.wallS, attempted, failed,
+      Outcome(if (ctx.traced) untracedS.toSeq else r.times, r.cpuS.sum, attempted, failed,
         problems.toSeq, Nil, layers ++ Map("run.failed_frac" -> failed.toDouble / math.max(1, attempted)))
     }
   }

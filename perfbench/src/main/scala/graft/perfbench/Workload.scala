@@ -31,13 +31,12 @@ final case class Ctx(spark: SparkSession, seed: Long, seconds: Double, cores: In
   *
   * @param opTimes   seconds of each timed op, in order
   * @param opCpuS    process CPU seconds of the timed ops, summed
-  * @param measuredS wall seconds of the measuring loop
   * @param problems  why outputs were wrong; any entry makes the run incorrect
   * @param user      end-user metrics that only some workloads have, by name
   *                  with unit (printed, not part of the fixed metric set)
   * @param layers    per-layer metrics of a traced run, by name
   */
-final case class Outcome(opTimes: Seq[Double], opCpuS: Double, measuredS: Double,
+final case class Outcome(opTimes: Seq[Double], opCpuS: Double,
                          attempted: Int, failed: Int, problems: Seq[String],
                          user: Seq[(String, Double, String)],
                          layers: Map[String, Double])
@@ -73,8 +72,7 @@ trait Workload {
 object ClosedLoop {
   /** `cpuS`: process CPU seconds each op used (all threads: the driver,
     * Spark's task threads, JIT and GC). */
-  final case class Result(times: Seq[Double], cpuS: Seq[Double], errors: Seq[Throwable],
-                          wallS: Double)
+  final case class Result(times: Seq[Double], cpuS: Seq[Double], errors: Seq[Throwable])
 
   private val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     .asInstanceOf[com.sun.management.OperatingSystemMXBean]
@@ -96,6 +94,6 @@ object ClosedLoop {
       heap.probe()
     }
     heap.probe(force = true)
-    Result(times.result(), cpu.result(), errors.result(), (System.nanoTime() - start) / 1e9)
+    Result(times.result(), cpu.result(), errors.result())
   }
 }
