@@ -83,12 +83,13 @@ object Main {
     val endToEnd = Seq(
       ("setup_s", setupS, "s"),
       ("op_p50_s", if (o.opTimes.isEmpty) 0.0 else Stats.median(o.opTimes), "s"),
-      // per second of op time: the heap probes between ops do not count
-      ("ops_per_s", o.opTimes.size / math.max(1e-9, o.opTimes.sum), "1/s"),
       ("cpu_s_per_op", o.opCpuS / math.max(1, o.opTimes.size), "s"),
       ("peak_heap_mb", heapMb, "MiB"))
     val tail = Stats.tail(o.opTimes)
-    val shown = endToEnd ++ o.user ++
+    // per second of op time (the heap probes between ops do not count);
+    // printed only: with one client it restates the mean op time
+    val opsPerS = ("ops_per_s", o.opTimes.size / math.max(1e-9, o.opTimes.sum), "1/s")
+    val shown = endToEnd ++ Seq(opsPerS) ++ o.user ++
       tail.map { case (p, v) => (f"op_tail_p$p%s_s".replace(".0_s", "_s"), v, "s") } ++
       Seq(("failed_frac", if (o.attempted == 0) 0.0 else o.failed.toDouble / o.attempted, "frac"),
         ("ops", o.opTimes.size.toDouble, "count"))
