@@ -6,14 +6,16 @@ Usage (from the repository root):
     python3 perfbench/run.py --workload <name> --seed <n> --seconds <s> --trace <0|1>
 
 Workloads: monthly_load, serving (see perfbench/README.md).
-The first run builds the engine and the benchmark from source with sbt;
-later runs reuse the build while no source file has changed. The last
+The first run builds the engine and the benchmark from source with sbt
+and prepares every workload's seed-independent inputs; later runs reuse
+both while no source file has changed. The last
 line of standard output is one JSON object: correct, attempted, failed
 and metrics. Exits non-zero, without printing a result, when the engine's
 sources are absent or the run fails.
 """
 import argparse
 import hashlib
+import json
 import os
 import shutil
 import signal
@@ -27,14 +29,14 @@ ENGINE_SRC = os.path.join(ROOT, "src", "main", "scala")
 TARGET = os.path.join(BENCH, "target")
 CLASSPATH = os.path.join(TARGET, "bench.classpath")
 STAMP = os.path.join(TARGET, "bench.stamp")
-# seed-independent inputs (the mart lake, the neardup tables), kept across
-# runs of one build and keyed by its source digest
+# seed-independent inputs (the monthly history lake, the mart lake, the
+# neardup tables), kept across runs of one build and keyed by its source digest
 CACHE = os.path.join(BENCH, "cache")
-PREPARED = {"serving": ("mart_lake", "mart_reference", "neardup_tables")}
+PREPARED = {"monthly_load": ("monthly_history",),
+            "serving": ("mart_lake", "mart_reference", "neardup_tables")}
 WORKLOADS = ("monthly_load", "serving")
-NEARDUP_QUERIES = ("q245_basket_neardup", "q60_neardup_clusters", "q78_containment_pairs",
-                   "q127_prefix_jaccard")
 RUN_LIMIT_S = 170
+PREPARE_LIMIT_S = 600
 
 JDK17_OPENS = [
     "java.base/java.lang", "java.base/java.lang.invoke", "java.base/java.lang.reflect",
@@ -114,6 +116,13 @@ def run_java(cmd, timeout=RUN_LIMIT_S):
     return p.returncode, out.splitlines()
 
 
+def declared_metrics(trace):
+    """Name -> unit of the metrics BENCHMARK.json declares for a run."""
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
+        spec = json.load(fh)
+    return {m["name"]: m["unit"] for m in spec["per_layer" if trace else "end_to_end"]}
+
+
 def main():
     # a TERM from whoever started us unwinds through run_java, which kills
     # the JVM's process group before exiting
@@ -140,22 +149,24 @@ def main():
     work = os.path.join(BENCH, "work", str(os.getpid()))
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(os.path.join(work, "tmp"))
-    args = ["--workload", a.workload, "--seed", str(a.seed), "--seconds", str(a.seconds),
-            "--trace", str(a.trace), "--work", work, "--bench", BENCH, "--cache", cache,
-            "--out", os.path.join(BENCH, "out")]
-    deadline = time.time() + RUN_LIMIT_S
+    def args(workload):
+        return ["--workload", workload, "--seed", str(a.seed), "--seconds", str(a.seconds),
+                "--trace", str(a.trace), "--work", work, "--bench", BENCH, "--cache", cache,
+                "--out", os.path.join(BENCH, "out")]
     try:
-        missing = [c for c in PREPARED.get(a.workload, ())
-                   if not os.path.isdir(os.path.join(cache, c))]
-        if missing:
-            log(f"preparing {', '.join(missing)} (once per build)")
-            code, _ = run_java(java_cmd(args + ["--prepare", "1"], work), deadline - time.time())
-            if code != 0:
-                log(f"preparing failed (exit {code})")
-                sys.exit(5)
-        code, lines = run_java(java_cmd(args, work), deadline - time.time())
+        # every workload's inputs, so that only the run that builds pays
+        # for preparing them
+        for w in WORKLOADS:
+            missing = [c for c in PREPARED.get(w, ()) if not os.path.isdir(os.path.join(cache, c))]
+            if missing:
+                log(f"preparing {', '.join(missing)} (once per build)")
+                code, _ = run_java(java_cmd(args(w) + ["--prepare", "1"], work), PREPARE_LIMIT_S)
+                if code != 0:
+                    log(f"preparing failed (exit {code})")
+                    sys.exit(5)
+        code, lines = run_java(java_cmd(args(a.workload), work))
     except subprocess.TimeoutExpired:
-        log(f"run exceeded {RUN_LIMIT_S} s after the build; killed")
+        log("a benchmark JVM exceeded its time limit; killed")
         sys.exit(4)
     finally:
         shutil.rmtree(work, ignore_errors=True)
@@ -164,6 +175,11 @@ def main():
     if code != 0 or not lines or not lines[-1].startswith("{"):
         log(f"benchmark JVM failed (exit {code})")
         sys.exit(5)
+    measured = {k: v["unit"] for k, v in json.loads(lines[-1])["metrics"].items()}
+    if measured != declared_metrics(a.trace):
+        log("the run's metrics and units differ from BENCHMARK.json: "
+            f"{sorted(set(measured.items()) ^ set(declared_metrics(a.trace).items()))}")
+        sys.exit(6)
     print(lines[-1], flush=True)
 
 

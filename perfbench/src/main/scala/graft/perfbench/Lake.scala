@@ -89,45 +89,37 @@ object RowPrint {
   }
 }
 
-/** Largest live heap: heap in use right after a full collection, probed
-  * between ops (at most every `everyS` seconds) and after the last one.
-  * Probing outside the timed ops keeps the collections out of op times;
-  * a full collection makes the figure the data the process retained, not
-  * how far the young generation happened to fill. */
-final class HeapMeter(sc: org.apache.spark.SparkContext, everyS: Double = 5.0) {
+/** Heap the process retains once its ops are done: heap in use after
+  * a full collection past the last op. Nothing is collected between ops,
+  * so an op's garbage is collected, and timed, as it would be without the
+  * meter. Spark's cleaner drops the cached blocks of unreachable frames
+  * only after a collection finds them, and asynchronously, so the meter
+  * waits (up to 2 s) for those blocks to go and collects until the heap
+  * stops shrinking; blocks a live frame holds count. */
+final class HeapMeter(sc: org.apache.spark.SparkContext) {
   import java.lang.management.ManagementFactory
 
-  private var peak = 0L
-  private var last = Long.MinValue
+  private var retained = 0L
 
-  def probe(force: Boolean = false): Unit = {
-    val now = System.nanoTime()
-    if (force || last == Long.MinValue || (now - last) / 1e9 >= everyS) {
-      def collect(): Long = {
-        System.gc()
-        ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed
-      }
-      // Spark's cleaner drops the cached and checkpointed blocks of
-      // unreachable frames only after a collection finds them, and
-      // asynchronously: wait (up to 2 s) until no RDD blocks remain, then
-      // collect until the heap stops shrinking. Blocks a frame still
-      // holds outlive the wait and count.
-      collect()
-      val deadline = System.nanoTime() + 2000000000L
-      while (sc.getRDDStorageInfo.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
-      var prev = Long.MaxValue
-      var used = collect()
-      var rounds = 1
-      while (rounds < 6 && prev - used > (4L << 20)) {
-        Thread.sleep(100)
-        prev = used
-        used = collect()
-        rounds += 1
-      }
-      peak = math.max(peak, used)
-      last = System.nanoTime()
+  def measure(): Unit = {
+    def collect(): Long = {
+      System.gc()
+      ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed
     }
+    collect()
+    val deadline = System.nanoTime() + 2000000000L
+    while (sc.getRDDStorageInfo.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    var prev = Long.MaxValue
+    var used = collect()
+    var rounds = 1
+    while (rounds < 6 && prev - used > (4L << 20)) {
+      Thread.sleep(100)
+      prev = used
+      used = collect()
+      rounds += 1
+    }
+    retained = used
   }
 
-  def peakMb: Double = peak / (1024.0 * 1024.0)
+  def retainedMb: Double = retained / (1024.0 * 1024.0)
 }

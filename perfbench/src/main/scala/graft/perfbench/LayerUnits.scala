@@ -33,7 +33,6 @@ object LayerUnits {
       "spark.stage_retries" -> "count",
       "driver.no_job_frac" -> "frac",
       "trace.overhead_frac" -> "frac", "trace.spans_per_op" -> "count",
-      "run.op_tail_s" -> "s",
       "run.trips_per_s" -> "1/s", "run.lake_bytes_per_trip" -> "B",
       "run.failed_frac" -> "frac")
 
@@ -69,8 +68,4 @@ object LayerUnits {
   /** Mean per op of the summed self time of spans called `name`. */
   def selfS(view: TraceView, spans: Seq[Span], name: String, ops: Int): Double =
     spans.filter(_.name == name).map(view.selfNs).sum / 1e9 / math.max(1, ops)
-
-  /** Tail latency by the ten-beyond rule; absent below 20 samples. */
-  def tail(times: Seq[Double]): Map[String, Double] =
-    Stats.tail(times).fold(Map.empty[String, Double])(t => Map("run.op_tail_s" -> t._2))
 }

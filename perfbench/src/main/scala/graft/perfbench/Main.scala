@@ -75,22 +75,26 @@ object Main {
     val jvmStart = ManagementFactory.getRuntimeMXBean.getStartTime
     val setupS = (System.currentTimeMillis() - jvmStart) / 1000.0
     val o = measure()
-    val heapMb = heap.peakMb
+    val heapMb = heap.retainedMb
     tracer.close()
     if (traced) writeTrace(s"$outDir/trace-${w.name}-$seed.json", tracer)
     spark.stop()
 
     val endToEnd = Seq(
       ("setup_s", setupS, "s"),
-      ("op_p50_s", if (o.opTimes.isEmpty) 0.0 else Stats.median(o.opTimes), "s"),
       ("cpu_s_per_op", o.opCpuS / math.max(1, o.opTimes.size), "s"),
-      ("peak_heap_mb", heapMb, "MiB"))
+      ("retained_heap_mb", heapMb, "MiB"))
+    // Printed only: op wall time follows how much CPU a shared host lends
+    // the run. On a 4-vCPU VM with 5-25% CPU steal, serving's median op
+    // time spread 0.26-0.30 of its median across ten seeds, wider than any
+    // bound a regression check can use. With one client, ops_per_s
+    // restates the mean op time.
+    val latency = Seq(
+      ("op_p50_s", if (o.opTimes.isEmpty) 0.0 else Stats.median(o.opTimes), "s"),
+      ("ops_per_s", o.opTimes.size / math.max(1e-9, o.opTimes.sum), "1/s"))
     val tail = Stats.tail(o.opTimes)
-    // per second of op time (the heap probes between ops do not count);
-    // printed only: with one client it restates the mean op time
-    val opsPerS = ("ops_per_s", o.opTimes.size / math.max(1e-9, o.opTimes.sum), "1/s")
-    val shown = endToEnd ++ Seq(opsPerS) ++ o.user ++
-      tail.map { case (p, v) => (f"op_tail_p$p%s_s".replace(".0_s", "_s"), v, "s") } ++
+    val shown = endToEnd ++ latency ++ o.user ++
+      tail.map { case (p, v) => (f"op_p$p%s_s".replace(".0_s", "_s"), v, "s") } ++
       Seq(("failed_frac", if (o.attempted == 0) 0.0 else o.failed.toDouble / o.attempted, "frac"),
         ("ops", o.opTimes.size.toDouble, "count"))
     shown.foreach { case (k, v, u) => println(f"metric ${w.name} $k $v%.6f $u") }

@@ -22,8 +22,6 @@ final class MartOps(ctx: Ctx) extends OpSet {
   private val silverPath = s"$lake/silver"
   private val reference = loadReference(ctx)
   views.foreach { case (v, t) => spark.read.parquet(s"$lake/$t").createOrReplaceTempView(v) }
-  // an untimed pass brings statement times nearer their steady state
-  Phase("set-up warm statements")(stmts.indices.foreach(run))
 
   val names: IndexedSeq[String] = stmts.map(_.name)
   def expected(i: Int): String = reference(i)

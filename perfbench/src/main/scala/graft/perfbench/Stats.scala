@@ -6,7 +6,7 @@ package graft.perfbench
 object Stats {
 
   /** Candidate tail percentiles, highest first. */
-  val TailLadder: Seq[Double] = Seq(99.9, 99.0, 95.0, 90.0, 75.0, 50.0)
+  val TailLadder: Seq[Double] = Seq(99.9, 99.0, 95.0, 90.0)
 
   def rank(p: Double, n: Int): Int = math.max(1, math.ceil(p / 100.0 * n - 1e-9).toInt)
 
@@ -24,7 +24,7 @@ object Stats {
 
   /** The highest percentile on [[TailLadder]] that has at least
     * `minBeyond` samples ranked above it, as (percentile, value); None
-    * when even the median lacks that many. */
+    * when even p90 lacks that many (below 100 samples at the default). */
   def tail(xs: Seq[Double], minBeyond: Int = 10): Option[(Double, Double)] = {
     val n = xs.size
     TailLadder.find(p => n - rank(p, n) >= minBeyond)

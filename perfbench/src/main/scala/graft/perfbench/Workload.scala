@@ -49,10 +49,10 @@ object Phase {
     finally System.err.println(f"[perfbench] $what: ${(System.nanoTime() - t0) / 1e9}%.2f s")
   }
 
-  /** Log each op's median time to standard error, by op name. */
+  /** Log each op's times to standard error, by op name. */
   def logByName(named: Seq[(String, Double)]): Unit =
     named.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (n, xs) =>
-      System.err.println(f"[perfbench] $n: ${xs.size} ops, median ${Stats.median(xs.map(_._2))}%.3f s")
+      System.err.println(s"[perfbench] $n: ${xs.map(x => f"${x._2}%.3f").mkString(" ")} s")
     }
 }
 
@@ -91,9 +91,8 @@ object ClosedLoop {
       times += (System.nanoTime() - t0) / 1e9
       cpu += (os.getProcessCpuTime - c0) / 1e9
       i += 1
-      heap.probe()
     }
-    heap.probe(force = true)
+    heap.measure()
     Result(times.result(), cpu.result(), errors.result())
   }
 }

@@ -7,16 +7,14 @@ class StatsSpec extends AnyFunSuite {
 
   test("tail reports the highest percentile with at least ten samples beyond it") {
     assert(Stats.tail(samples(100)) == Some((90.0, 90.0)))
-    assert(Stats.tail(samples(99)) == Some((75.0, 75.0)))
     assert(Stats.tail(samples(200)) == Some((95.0, 190.0)))
     assert(Stats.tail(samples(1000)) == Some((99.0, 990.0)))
     assert(Stats.tail(samples(10000)) == Some((99.9, 9990.0)))
   }
 
-  test("tail falls back to the median, then to nothing, as samples run out") {
-    assert(Stats.tail(samples(39)) == Some((50.0, 20.0)))
-    assert(Stats.tail(samples(20)) == Some((50.0, 10.0)))
-    assert(Stats.tail(samples(19)).isEmpty)
+  test("no tail below 100 samples: p90 needs ten beyond it") {
+    assert(Stats.tail(samples(99)).isEmpty)
+    assert(Stats.tail(samples(20)).isEmpty)
     assert(Stats.tail(Nil).isEmpty)
   }
 
