@@ -71,7 +71,7 @@ object CrossChecks {
     once("dtwBlockedEqAllPairs", d) {
       import graft.operators.Timeseries
       val k = 2
-      val series = SparkEntry.dailyCountSeries(s, d)
+      val series = registry.QuerySupport.dailyCountSeries(s, d)
       val blocked = Timeseries.dtwTopKBlocked(series, "event_type",
           "x", "y", band = 5, k = k, nSeg = 7, cellCents = 10000L)
         .select("query_key", "neighbor", "rank", "dtw_cents")
@@ -89,7 +89,7 @@ object CrossChecks {
   def aggMergeFoldEqualsOneShot(s: SparkSession, d: String): Unit =
     once("aggMergeFoldEqOneShot", d) {
       import graft.operators.AggMerge
-      val folded = SparkEntry.mergedDailyValueCounts(s, d)
+      val folded = registry.QuerySupport.mergedDailyValueCounts(s, d)
       val one = AggMerge.dailyValuePartial(
         graft.sources.Tables.read(s, d, "lineitem"), "l_shipdate",
         "l_extendedprice")
@@ -229,7 +229,7 @@ object CrossChecks {
       import graft.operators.Timeseries
       import org.apache.spark.sql.expressions.Window
       val k = 2
-      val series = SparkEntry.dailyCountSeries(s, d)
+      val series = registry.QuerySupport.dailyCountSeries(s, d)
       val pruned = Timeseries.dtwTopK(series, "event_type", "x", "y",
           band = 5, k = k)
         .select("query_key", "neighbor", "rank", "dtw_cents")

@@ -101,7 +101,7 @@ object LakeFixtures {
   /** q377's staging lake: the full 19-column trip frame month-sorted
     * into 16 range-cut files with a `pickup_month` STRING column —
     * the month-pruned ingest source. Built by the caller-supplied
-    * frame builder so SparkEntry keeps ownership of the trip-schema
+    * frame builder so the query registry keeps ownership of the trip-schema
     * derivation. */
   def monthStaging(s: SparkSession, d: String)(build: => DataFrame)
       : String =
@@ -265,7 +265,7 @@ object LakeFixtures {
     }
 
   /** q359's mart: the full 8-model materialized medallion lake
-    * (dbt-run parity, SparkEntry.scala q333's models) built ONCE per
+    * (dbt-run parity, q333's models) built ONCE per
     * JVM — the SERVING shape SqlCatalog's amortization ledger
     * documents: pay the build once, every consumer scans tables. The
     * per-call half is [[graft.sql.SqlCatalog.registerLayersExisting]]
@@ -276,7 +276,7 @@ object LakeFixtures {
   def materializedLayers(s: SparkSession, d: String): String =
     once("matcat", d) { dir =>
       graft.sql.SqlCatalog.registerLayersMaterialized(s,
-        SparkEntry.tripLakeFrame(s, d), dir)
+        registry.QuerySupport.tripLakeFrame(s, d), dir)
     }
 
   /** q339's lake: the seeded THREE-RUN month-cursor pipeline replay
@@ -287,7 +287,7 @@ object LakeFixtures {
     * consumers actually repeat. */
   def pipelineReplayLake(s: SparkSession, d: String): String =
     once("pipe339", d) { lake =>
-      val raw = SparkEntry.tripLakeFrame(s, d).localCheckpoint(true)
+      val raw = registry.QuerySupport.tripLakeFrame(s, d).localCheckpoint(true)
       val p = new graft.pipeline.Pipeline(s, lake,
         m => raw.filter(
           date_format(col("tpep_pickup_datetime"), "yyyy-MM") === m))

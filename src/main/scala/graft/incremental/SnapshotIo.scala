@@ -69,7 +69,6 @@ private[graft] object SnapshotIo {
               case "BINARY" => g.getString(idx, 0)
               case "INT64" => java.lang.Long.valueOf(g.getLong(idx, 0))
               case "INT32" => java.lang.Long.valueOf(g.getInteger(idx, 0).toLong)
-              case "BOOLEAN" => java.lang.Boolean.valueOf(g.getBoolean(idx, 0))
               case other => throw new IllegalArgumentException(
                 s"SnapshotIo: unsupported manifest column type $other")
             })
@@ -88,11 +87,6 @@ private[graft] object SnapshotIo {
   def readLongs(conf: Configuration, dir: String,
                 column: String): Seq[Long] =
     readValues(conf, dir, column).map(_.asInstanceOf[java.lang.Long].longValue())
-
-  def readBooleans(conf: Configuration, dir: String,
-                   column: String): Seq[Boolean] =
-    readValues(conf, dir, column)
-      .map(_.asInstanceOf[java.lang.Boolean].booleanValue())
 
   /** Does the directory exist with at least a completed write? */
   def exists(conf: Configuration, dir: String): Boolean = {
@@ -116,12 +110,6 @@ private[graft] object SnapshotIo {
                  values: Seq[Long], overwrite: Boolean): Unit =
     writeAtomic(conf, dir, overwrite,
       s"message manifest { required int64 $column; }",
-      values.map(v => (g: Group) => { g.append(column, v); () }))
-
-  def writeBooleans(conf: Configuration, dir: String, column: String,
-                    values: Seq[Boolean], overwrite: Boolean): Unit =
-    writeAtomic(conf, dir, overwrite,
-      s"message manifest { required boolean $column; }",
       values.map(v => (g: Group) => { g.append(column, v); () }))
 
   /** Read a sidecar text file committed atomically WITH a manifest

@@ -44,16 +44,6 @@ object DedupOps {
   def shingles(text: Column, n: Int): Column =
     shinglesFromTokens(tokens(text), n)
 
-  /** One MinHash value: min over shingles of a salted md5, kept as a
-    * 16-hex-char string (fixed-width lowercase hex ⇒ lexicographic min ==
-    * numeric min; portable to any engine with md5+substr). */
-  private def minhash(sh: Column, salt: Int): Column =
-    array_min(transform(sh, s => substring(md5(concat(s, lit(s"#$salt"))), 1, 16)))
-
-  /** MinHash signature of `numHashes` values. */
-  def minhashSignature(text: Column, shingleSize: Int, numHashes: Int): Column =
-    array((0 until numHashes).map(i => minhash(shingles(text, shingleSize), i)): _*)
-
   /** MinHash+LSH candidate pairs: band the signature (`bands` bands of
     * `rows` hashes), bucket-join on (band_index, band_hash), emit each
     * candidate pair once with its estimated and exact Jaccard.

@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
   * the exact baseline, and a sign-LSH bucketed variant as the scale path.
   *
   * All vector math is double-precision built-in expressions — no UDFs, no
-  * driver loops. Hot paths unroll the dot product to `dim` codegen'd terms
-  * ([[Similarity.dotFixed]]); the HOF forms remain for unknown dimensions.
+  * driver loops. Hot paths use the codegen'd [[graft.functions.DotProduct]]
+  * and [[graft.functions.CosineSim]] expressions; the HOF forms remain for
+  * casual use.
   * At 100 TB the query set is broadcast (it is small by construction); the
   * corpus is never shuffled in the brute-force path and shuffled once by
   * bucket in the LSH path.
@@ -17,7 +18,7 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   /** Σ aᵢ·bᵢ in double precision (higher-order-function form; interpreted —
-    * fine for casual use, hot paths use [[dotFixed]]). */
+    * fine for casual use, hot paths use [[graft.functions.DotProduct]]). */
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, x) => acc + x)
@@ -25,7 +26,9 @@ object Similarity {
   /** Σ aᵢ·bᵢ expanded to `dim` plain expressions — array HOF lambdas
     * evaluate interpreted (~100μs/row at dim 64), while this unrolled sum
     * stays inside whole-stage codegen. Addition order matches [[dot]]'s
-    * left fold, so results are bit-identical. */
+    * left fold, so results are bit-identical. No engine path calls it;
+    * DotProductSpec keeps it as the unrolled reference the native
+    * expression must match. */
   def dotFixed(a: Column, b: Column, dim: Int): Column =
     (1 to dim).map(i =>
       element_at(a, i).cast("double") * element_at(b, i).cast("double")).reduce(_ + _)
@@ -34,10 +37,6 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (norm(a) * norm(b))
-
-  /** Codegen-friendly cosine for a known dimension. */
-  def cosineFixed(a: Column, b: Column, dim: Int): Column =
-    dotFixed(a, b, dim) / (sqrt(dotFixed(a, a, dim)) * sqrt(dotFixed(b, b, dim)))
 
   /** Hot-path cosine: the fused codegen'd
     * [[graft.functions.CosineSim]] expression — dot product and both
@@ -109,9 +108,8 @@ object Similarity {
   /** Sign-bit (1-bit) BINARY quantization of an embedding column —
     * the 32× compression tier below [[quantizeInt8]] (4×) and
     * [[pqAssign]] (codebook): dim d packs into bit (d mod 64) of word
-    * (d div 64), bit set iff v_d > 0. Each word ORs Scala-literal
-    * shifted bit masks (1L << 63 wraps into the sign bit at compile
-    * time — no runtime arithmetic to overflow under ANSI mode). The
+    * (d div 64), bit set iff v_d > 0. Each word ORs `1L << b` masks
+    * (bit 63 wraps into the sign bit — bitwise, so no ANSI overflow). The
     * packed `Array[Long]` IS the stored index at scale:
     * Hamming distance between packed vectors is a handful of XOR +
     * popcount word ops ([[binaryHammingTopK]]), and sign agreement is
@@ -128,16 +126,16 @@ object Similarity {
     // whole delta) — the giant generated when-tree costs more in
     // codegen than the interpreted lambda costs to run at the 2k-row
     // pack stage this tier operates on. Bitwise ops stay wrap-exact
-    // under ANSI (the top bit lands in the sign bit by design).
-    transform(sequence(lit(0), lit(nWords - 1)), w =>
-      aggregate(sequence(lit(0), lit(63)), lit(0L),
-        (acc, b) => {
-          val d = w * 64 + b // 0-based dim of this bit
-          when(d < dims &&
-            element_at(vec, d + 1).cast("double") > 0d,
+    // under ANSI (the top bit lands in the sign bit by design). The
+    // word list is Scala-static and each word's bit range stops at the
+    // last real dim, so no element_at ever indexes past `dims`.
+    array((0 until nWords).map { w =>
+      aggregate(sequence(lit(0), lit(math.min(63, dims - 1 - w * 64))),
+        lit(0L), (acc, b) =>
+          when(element_at(vec, b + (w * 64 + 1)).cast("double") > 0d,
             acc.bitwiseOR(call_function("shiftleft", lit(1L), b)))
-            .otherwise(acc)
-        }))
+            .otherwise(acc))
+    }: _*)
   }
 
   /** Hamming distance between two [[binarySign]]-packed vectors:

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.Cross
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, Window => LWindow}
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 /** Plan linting — the scale-review discipline this repo's PruningSpec /
   * RankStatsSpec enforce on its OWN operators, packaged for users to
@@ -55,14 +54,6 @@ object PlanAudit {
     }
     rawGlobalWindows ++ unboundedCross
   }
-
-  /** Shuffle exchanges in the PHYSICAL plan — not a defect by itself,
-    * but the number to watch across versions of a pipeline (a new
-    * exchange where there was none is usually a lost partitioning). */
-  def shuffleCount(df: DataFrame): Int =
-    df.queryExecution.executedPlan.collect {
-      case e: ShuffleExchangeExec => e
-    }.size
 
   /** Documented bound for VALUE-LATTICE global windows (round-14,
     * VERDICT r13 #3): operators like

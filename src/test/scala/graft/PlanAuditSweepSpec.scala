@@ -8,13 +8,13 @@ package graft
   * a rule go in the allowlist WITH A REASON; an empty allowlist is
   * the goal state.
   *
-  * The audit inspects `optimizedPlan` only — the returned frame is
-  * never executed here (side-effecting queries still run their
-  * internal builds, which is what Verify does anyway). */
+  * The audit inspects `optimizedPlan` only; the findings come from
+  * [[QuerySweep]]'s single pass, which also lints and counts each
+  * query (a query that raises while building shows up here as
+  * `query-raised-during-audit`). */
 class PlanAuditSweepSpec extends SparkSpec {
 
   test("PlanAudit sweep: zero findings across every registered query") {
-    import graft.operators.PlanAudit
     val allow: Map[String, String] = Map(
       "q311_bootstrap_ci" -> ("the global rank runs over the 50-replicate " +
         "means frame — replicate-scale by construction, but it sits " +
@@ -29,18 +29,8 @@ class PlanAuditSweepSpec extends SparkSpec {
         "order) — same class as q396"),
       "q436_sql_named_window" -> ("shared-dialect pin (named WINDOW " +
         "global order) — same class as q396"))
-    val dir = "/root/testdata/sf0.001"
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1)
-      .flatMap { case (name, fn) =>
-        val fs =
-          try PlanAudit.audit(fn(spark, dir))
-          catch {
-            case e: Throwable => Seq(PlanAudit.PlanFinding(
-              "query-raised-during-audit",
-              Option(e.getMessage).getOrElse(e.getClass.getName).take(300)))
-          }
-        fs.map(f => (name, f))
-      }
+    val offenders = QuerySweep.outcomes
+      .flatMap(o => o.findings.map(f => (o.name, f)))
       .filterNot { case (n, _) => allow.contains(n) }
     assert(offenders.isEmpty,
       "plan-audit findings (add to the allowlist ONLY with a reason):\n" +

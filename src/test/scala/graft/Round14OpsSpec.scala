@@ -181,21 +181,27 @@ class Round14OpsSpec extends SparkSpec {
   test("every .collect() in SparkEntry is metadata-scale: each site " +
     "must sit beside a version/path/metadata marker (the q535 " +
     "loser-collect class is banned — purgeMatching exists for that)") {
-    val src = scala.io.Source.fromFile(
-      "src/main/scala/graft/SparkEntry.scala", "UTF-8")
-    val lines = try src.getLines().toVector finally src.close()
+    // SparkEntry and the query registry its maps are views of
+    val files = new java.io.File("src/main/scala/graft/SparkEntry.scala") +:
+      new java.io.File("src/main/scala/graft/registry").listFiles()
+        .filter(_.getName.endsWith(".scala")).sortBy(_.getName).toSeq
+    assert(files.size > 2, "query registry sources not found")
     val marker = "(?i)(version|path|metadata|footer)".r
-    val bad = lines.zipWithIndex
-      .filter(_._1.contains(".collect()"))
-      .filterNot { case (_, i) =>
-        val window = lines.slice(math.max(0, i - 2), i + 1).mkString(" ")
-        marker.findFirstIn(window).isDefined
-      }
+    val bad = files.flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      val lines = try src.getLines().toVector finally src.close()
+      lines.zipWithIndex
+        .filter(_._1.contains(".collect()"))
+        .filterNot { case (_, i) =>
+          val window = lines.slice(math.max(0, i - 2), i + 1).mkString(" ")
+          marker.findFirstIn(window).isDefined
+        }
+        .map { case (l, i) => s"  ${f.getName}:${i + 1}: ${l.trim}" }
+    }
     assert(bad.isEmpty,
-      "row-scale collect suspects in SparkEntry (add a metadata-scale " +
-        "marker comment if genuinely metadata, or rewrite on a join):\n" +
-        bad.map { case (l, i) => s"  line ${i + 1}: ${l.trim}" }
-          .mkString("\n"))
+      "row-scale collect suspects in the query registry (add a " +
+        "metadata-scale marker comment if genuinely metadata, or " +
+        "rewrite on a join):\n" + bad.mkString("\n"))
   }
 
   // ---------------------------------------------------------------

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Round-15: the r14 ADVICE hardening set (view-safe tag names in the
@@ -680,6 +681,41 @@ class Round15OpsSpec extends SparkSpec {
       .select("query_id", "neighbor_id", "rank").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2).toLong)).toSet
     assert(bin == brute, s"binary(m=all) must equal brute force")
+  }
+
+  test("binarySign's static word loop packs exactly what the guarded " +
+    "per-word sequence form packed, at dims 1, 64, 80 and 129") {
+    import graft.llmdata.Similarity
+    // the previous form: every word folds 64 bits and a `d < dims`
+    // guard keeps element_at inside the vector
+    def guarded(vec: Column, dims: Int): Column =
+      transform(sequence(lit(0), lit((dims + 63) / 64 - 1)), w =>
+        aggregate(sequence(lit(0), lit(63)), lit(0L),
+          (acc, b) => {
+            val d = w * 64 + b
+            when(d < dims &&
+              element_at(vec, d + 1).cast("double") > 0d,
+              acc.bitwiseOR(call_function("shiftleft", lit(1L), b)))
+              .otherwise(acc)
+          }))
+    val rnd = new scala.util.Random(7)
+    for (dims <- Seq(1, 64, 80, 129)) {
+      val rows = (0L until 6L).map(id => (id,
+        if (id == 0L) Array.fill(dims)(0.0f)
+        else Array.fill(dims)(rnd.nextFloat() - 0.5f)))
+      val got = rows.toDF("id", "v")
+        .select(col("id"), Similarity.binarySign(col("v"), dims).as("n"),
+          guarded(col("v"), dims).as("o"))
+        .collect().map(r => (r.getLong(0), r.getSeq[Long](1), r.getSeq[Long](2)))
+      assert(got.length == rows.length)
+      got.foreach { case (id, n, o) =>
+        assert(n == o, s"dims=$dims id=$id: $n vs $o")
+        val expect = rows(id.toInt)._2.grouped(64).map(_.zipWithIndex
+          .foldLeft(0L) { case (acc, (x, b)) =>
+            if (x > 0f) acc | (1L << b) else acc }).toSeq
+        assert(n == expect, s"dims=$dims id=$id: $n vs $expect")
+      }
+    }
   }
 
   test("restore mints a new version pinning the old file set; a " +
