@@ -46,7 +46,6 @@ object Bench {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen/page-cache warmup outside the timed region
     Seq("lineitem", "orders", "customer", "events", "documents", "embeddings")
       .foreach(tbl =>

@@ -34,7 +34,6 @@ object BenchSpot {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     Seq("lineitem", "orders", "customer", "events", "documents",
       "embeddings").foreach(tbl =>
       try graft.sources.Tables.read(spark, sfDir, tbl).count()

@@ -61,7 +61,6 @@ object ScaleUp {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val offsets: Map[String, Long] = domainOwner.map {
       case (dom, (tbl, c)) =>
         dom -> (graft.sources.Tables.read(spark, src, tbl)

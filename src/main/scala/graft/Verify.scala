@@ -13,7 +13,6 @@ object Verify {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // dev convenience: SPARK_GRAFT_ONLY=q80_x,q81_y runs a subset (the
     // driver never sets it, so the gate always sees every query)

@@ -177,10 +177,9 @@ object Drift {
       .select(digit.as("digit"))
       .filter(length(col("digit")) > 0)
       .groupBy(col("digit")).agg(count(lit(1)).as("n"))
-    val expectedDf = broadcast(
-      df.sparkSession.createDataFrame(
+    val expectedDf = df.sparkSession.createDataFrame(
         expected.zipWithIndex.map { case (p, i) => ((i + 1).toString, p) })
-        .toDF("digit", "expected_share"))
+      .toDF("digit", "expected_share")
     val totals = counts.agg(sum(col("n")).as("total"))
     // full outer vs the 9-digit table so an absent digit surfaces as 0
     expectedDf.join(counts, Seq("digit"), "left")

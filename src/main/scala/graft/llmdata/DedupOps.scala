@@ -15,6 +15,8 @@ import org.apache.spark.sql.functions._
   */
 object DedupOps {
 
+  private val memDisk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+
   /** Exact dedup on a canonical fingerprint: one hash-shuffle groupBy.
     * Returns (fingerprint, keeper_id, dup_count) — keeper = min id. */
   def exact(df: DataFrame, idCol: String, textCol: String): DataFrame =
@@ -27,8 +29,8 @@ object DedupOps {
     * array lambdas are interpreted, Catalyst inlines deterministic
     * expressions into them, and an inlined split would re-tokenize the
     * text once per `element_at` — O(tokens²) per document. Callers
-    * materialize the token array behind an exchange (see minhashLsh) or
-    * accept the cost on small frames. */
+    * materialize the token array behind an exchange or accept the cost on
+    * small frames; the row-oriented form is [[shingleStream]]. */
   def shinglesFromTokens(toks: Column, n: Int): Column =
     when(size(toks) < n, array().cast("array<string>")).otherwise(
       array_sort(array_distinct(
@@ -38,29 +40,48 @@ object DedupOps {
   /** Whitespace tokenization shared by every text-dedup operator. */
   def tokens(text: Column): Column = split(trim(lower(text)), "\\s+")
 
-  /** Word n-gram shingles of `textCol` (distinct, sorted for set
-    * semantics). Empty/short docs yield an empty array. Convenience form —
-    * hot paths tokenize separately (see [[shinglesFromTokens]]). */
-  def shingles(text: Column, n: Int): Column =
-    shinglesFromTokens(tokens(text), n)
+  // ---- MinHash-LSH and exact overlap: one core ----------------------------
+  //
+  // Every near-dup operator below treats a document as a SET of items —
+  // text as its distinct word n-gram shingles ([[shingleSet]]), an item
+  // set as given — and runs the same three stages over distinct
+  // (doc_id, s) memberships:
+  //   1. signature ([[signature]]): bands×rows salted-md5 minima
+  //      ([[hexHash]] per text row, [[longHash]] per distinct set item)
+  //      and the set size, one doc-keyed aggregate, then one (doc_id, sz,
+  //      band, band_hash) row per band;
+  //   2. candidates ([[bandCandidates]]): the band-bucket self-join with
+  //      the hot-bucket star guard and the size-ratio prefilter, deduped
+  //      and eagerly checkpointed;
+  //   3. verify ([[overlap]]): the exact intersection count of each
+  //      candidate pair, (id_a, id_b, n_inter, sz_a, sz_b), kept by the
+  //      operator's own measure — jaccard ([[jaccardOf]]), containment,
+  //      or overlap/union size — and eagerly checkpointed.
+  // [[containmentPairs]] and [[prefixJaccardPairs]] form their
+  // candidates by exact blocking instead of bands and share stage 3.
+  // The whole core is row-oriented — no array columns, no higher-order
+  // functions: HOF lambdas (`transform`/`array_min`/`array_intersect`)
+  // evaluate interpreted at ~100μs/element, while explode → window →
+  // codegen'd joins/aggregates with map-side combine measured 14 s → ~3 s
+  // on 5k docs.
 
   /** MinHash+LSH candidate pairs: band the signature (`bands` bands of
     * `rows` hashes), bucket-join on (band_index, band_hash), emit each
-    * candidate pair once with its estimated and exact Jaccard.
+    * verified pair once with its exact Jaccard.
     *
     * Cost at scale: |docs| × bands rows shuffled on band_hash; pairs only
     * materialize within buckets (collision probability ≈ s^rows per band,
     * the classic S-curve — Broder 1997; Leskovec/Rajaraman/Ullman ch.3).
     *
     * Materialization contract: the returned frame is EAGERLY computed
-    * (`localCheckpoint`) — the pair set is the tiny near-dup slice of the
-    * corpus, and checkpointing it lets this operator release its two large
-    * intermediate caches (the shingle stream and the candidate-shingle
-    * slice) before returning, instead of leaking them into a long-lived
-    * driver (round-1 judge finding). Downstream consumers
-    * ([[nearDupClusters]]) fork the result repeatedly; a checkpointed
-    * input makes those forks cache reads, not recomputations of the whole
-    * LSH pipeline.
+    * (the verify stage's `localCheckpoint`) — the pair set is the tiny
+    * near-dup slice of the corpus, and checkpointing it lets this operator
+    * release its intermediate caches (the shingle sets and the signature
+    * rows) before returning, instead of leaking
+    * them into a long-lived driver (round-1 judge finding). Downstream
+    * consumers ([[nearDupClusters]]) fork the result repeatedly; a
+    * checkpointed input makes those forks cache reads, not recomputations
+    * of the whole LSH pipeline.
     *
     * Recall envelope: a pair at jaccard s collides in at least one band
     * with probability 1 − (1 − s^rows)^bands; the S-curve midpoint is
@@ -72,21 +93,25 @@ object DedupOps {
     * recall for cost — candidates at jaccard 0.5 under the defaults
     * appear with only ~23% probability. The pinned bench/oracle queries
     * choose measured operating points (SweepLsh) instead of these
-    * defaults. */
+    * defaults. `maxBucketSize` is the hot-bucket star guard (see
+    * [[bandCandidates]]); pass Int.MaxValue to turn it off. */
   def minhashLsh(df: DataFrame, idCol: String, textCol: String,
                  shingleSize: Int = 3, bands: Int = 4, rows: Int = 4,
                  jaccardThreshold: Double = 0.7,
-                 maxBucketSize: Int = 256): DataFrame =
-    lshVerified(df, idCol, textCol, shingleSize, bands, rows, maxBucketSize)
-      .filter(col("jaccard") >= jaccardThreshold)
-      .select("id_a", "id_b", "jaccard")
+                 maxBucketSize: Int = 256): DataFrame = {
+    val sets = shingleSet(df, idCol, textCol, shingleSize).persist(memDisk)
+    val verified = overlap(bandCandidates(bandedSignatures(sets, bands, rows),
+      jaccardThreshold, maxBucketSize), sets, jaccardOf >= jaccardThreshold)
+    sets.unpersist()
+    verified.select(col("id_a"), col("id_b"), jaccardOf.as("jaccard"))
+  }
 
-  /** MinHash+LSH near-dup over ARBITRARY item sets — the text pipeline
-    * with stage 1 swapped out: instead of tokenize→shingle, the caller
-    * supplies one (set_id, item) row per membership (order baskets,
-    * user watch-histories, playlist tracks, tag sets). Items hash via
-    * their string form; duplicate membership rows are harmless (the
-    * first stage is a distinct).
+  /** MinHash+LSH near-dup over ARBITRARY item sets — the text operator
+    * with the shingling swapped out: the caller supplies one (set_id,
+    * item) row per membership (order baskets, user watch-histories,
+    * playlist tracks, tag sets). Items hash via their string form;
+    * duplicate membership rows are harmless (the first stage is a
+    * distinct).
     *
     * EXACT-DEDUP-FIRST (round-16, VERDICT r15 #1): item-set corpora are
     * dominated by REPEATED sets (every one-item basket of a popular
@@ -96,128 +121,65 @@ object DedupOps {
     * (10× data → 100× intra-set candidate pairs, 75 s vs 7 s). This
     * operator therefore (1) collapses the corpus to DISTINCT sets
     * (grouped by an order/duplicate-insensitive exact set fingerprint:
-    * two independent salted-hash XOR lanes + the set size — declarative
-    * aggregates only, so the whole reduction stays in codegen
-    * HashAggregate), (2) runs signature/band/verify over one
-    * representative per distinct set, and (3) expands verified rep
-    * pairs back to member pairs at the end — intra-group pairs are
-    * emitted directly at jaccard 1.0 (identical sets), so the only
-    * quadratic term left is the OUTPUT itself. Candidate/verify cost is
-    * now distinct-set-scale, independent of duplication.
+    * two independent salted-hash XOR lanes + the set size, computed in
+    * the signature aggregate itself — declarative aggregates only, so
+    * the whole reduction stays in codegen HashAggregate), (2) runs the
+    * shared candidate and verify stages over one representative per
+    * distinct set, and (3) expands verified rep pairs back to member
+    * pairs at the end — intra-group pairs are emitted directly at
+    * jaccard 1.0 (identical sets), so the only quadratic term left is
+    * the OUTPUT itself. Candidate/verify cost is distinct-set-scale,
+    * independent of duplication. Text keeps the per-doc form: its
+    * identical-document clumps are what the star guard bounds
+    * ([[minhashLsh]] pins that contract). Here the candidate stage runs
+    * with the guard off, as before: a star would drop non-center rep
+    * pairs that this operator's output contains.
     *
-    * SIZE-RATIO PREFILTER (§3.2-style semi-reduction): jaccard(A,B) ≤
-    * min(|A|,|B|)/max(|A|,|B|) with equality exactly at the subset
-    * case, and the bound evaluates in the SAME double division the
-    * verify stage uses (IEEE division is monotone, so a pair failing
-    * the bound can never reach the threshold) — candidates failing it
-    * skip the intersection join entirely. Output is provably
-    * unchanged; measured 199k → 133k verified rep pairs at sf0.1.
-    *
-    * The signature is a 60-BIT LONG minhash (the first 15 hex chars of
-    * the salted md5 as a BIGINT) rather than the text family's
-    * 16-hex-char STRING minima: string minima force sort-based
-    * aggregation, long minima keep the signature reduction inside
-    * codegen HashAggregate. Band hashes are md5 over the '|'-joined
-    * DECIMAL renderings of the minima. The salted hashes are computed
-    * once per DISTINCT ITEM (vocabulary-scale) and broadcast back to
-    * the membership stream. Candidate semantics are unchanged from the
-    * per-doc form: a pair is a candidate iff its two SETS share at
-    * least one (band, band_hash) — identical sets share all of them. */
+    * The salted hashes are computed once per DISTINCT ITEM
+    * (vocabulary-scale) and broadcast back to the membership stream —
+    * item-set vocabularies are small, where a text corpus's shingle
+    * vocabulary is about as large as its membership stream. Candidate
+    * semantics are unchanged from the per-doc form: a pair is a
+    * candidate iff its two SETS share at least one (band, band_hash) —
+    * identical sets share all of them. */
   def minhashLshSets(df: DataFrame, idCol: String, itemCol: String,
                      bands: Int = 4, rows: Int = 4,
                      jaccardThreshold: Double = 0.7): DataFrame = {
-    val memLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val numHashes = bands * rows
-    val itemRows = df
+    val sets = df
       .select(col(idCol).as("doc_id"), col(itemCol).cast("string").as("s"))
       .filter(col("s").isNotNull)
-      .persist(memLevel)
-    def itemHash(salt: String) =
-      conv(substring(md5(concat(col("s"), lit(salt))), 1, 15), 16, 10)
-        .cast("long")
-    val itemHashes = itemRows.select(col("s")).distinct()
-      .select(col("s") +:
-        ((0 until numHashes).map(i => itemHash(s"#$i").as(s"__x$i")) ++
-          Seq(itemHash("#fpA").as("__fa"), itemHash("#fpB").as("__fb"))): _*)
-    // distinct memberships feed the doc aggregate (set semantics for
-    // the XOR lanes and the size — a duplicate row would cancel its
-    // own lane); the distinct flows straight into the join + aggregate
-    // pipeline, never cached (single consumer)
-    val prehashed = itemRows.distinct()
-      .join(graft.operators.Broadcasts.maybeBroadcast(itemHashes), Seq("s"))
-    // ONE doc-keyed declarative aggregate: the 16 signature minima AND
-    // the exact-set fingerprint (two 60-bit XOR lanes + size; XOR never
-    // overflows under ANSI, and two independent md5-salted lanes plus
-    // the size make a cross-set collision as improbable as the md5
-    // fingerprints the exact-dedup family already trusts), then ONE
-    // fp-keyed window pass assigns every doc its distinct-set
-    // representative (min member id) and group size — no second
-    // aggregate, no join back
-    val sigCols = (0 until numHashes).map(i => min(col(s"__x$i")).as(s"h$i"))
-    val aggCols = sigCols ++ Seq(
-      expr("bit_xor(__fa)").as("__fpa"), expr("bit_xor(__fb)").as("__fpb"),
-      count(lit(1)).as("__sz"))
-    val docAgg = prehashed.groupBy(col("doc_id"))
-      .agg(aggCols.head, aggCols.tail: _*)
-    val fpW = Window.partitionBy(col("__fpa"), col("__fpb"), col("__sz"))
-    val wAgg = docAgg
+      .distinct() // set semantics for the sizes and the XOR lanes
+      .persist(memDisk)
+    val itemHashes = sets.select(col("s")).distinct()
+      .select(col("s") +: (hashColumns(col("s"), numHashes, longHash) ++ Seq(
+        longHash(col("s"), "#fpA").as("__fa"),
+        longHash(col("s"), "#fpB").as("__fb"))): _*)
+    // ONE doc-keyed aggregate: the signature minima and size AND the
+    // exact-set fingerprint (two 60-bit XOR lanes; XOR never overflows
+    // under ANSI, and two independent md5-salted lanes plus the size
+    // make a cross-set collision as improbable as the md5 fingerprints
+    // the exact-dedup family already trusts), then ONE fp-keyed window
+    // pass assigns every doc its distinct-set representative (min
+    // member id) and group size — no second aggregate, no join back
+    val fpW = Window.partitionBy(col("__fpa"), col("__fpb"), col("sz"))
+    val sig = signature(
+        sets.join(graft.operators.Broadcasts.maybeBroadcast(itemHashes), Seq("s")),
+        numHashes, expr("bit_xor(__fa)").as("__fpa"), expr("bit_xor(__fb)").as("__fpb"))
       .withColumn("rep", min(col("doc_id")).over(fpW))
       .withColumn("__g", count(lit(1)).over(fpW))
-      .persist(memLevel)
+      .persist(memDisk)
     // (rep, member, group size) map — outlives the return (the
     // expansion reads it lazily), so eagerly checkpointed
-    val members = wAgg.select(col("rep"), col("doc_id"), col("__g"))
+    val members = sig.select(col("rep"), col("doc_id"), col("__g"))
       .localCheckpoint(true)
-    val banded = wAgg.filter(col("doc_id") === col("rep"))
-      .select(col("rep").as("doc_id"), col("__sz"),
-        posexplode(array((0 until bands).map(b =>
-          md5(concat_ws("|", (0 until rows).map(r =>
-            col(s"h${b * rows + r}").cast("string")): _*))): _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_hash")
-      .persist(memLevel)
-    // band-bucket candidates over DISTINCT SETS, with the size-ratio
-    // prefilter (see scaladoc) applied BEFORE the dedup exchange —
-    // failing pairs never reach the distinct, and the surviving pair
-    // rows carry both set sizes so the verify needs no size join at
-    // all. One eager checkpoint materializes the candidate set.
-    val candidates = banded.as("a").join(banded.as("b"), Seq("band", "band_hash"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .filter(least(col("a.__sz"), col("b.__sz")).cast("double") /
-        greatest(col("a.__sz"), col("b.__sz")).cast("double") >= jaccardThreshold)
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        col("a.__sz").as("__sza"), col("b.__sz").as("__szb"))
-      .distinct()
-      .localCheckpoint(true)
-    banded.unpersist()
-    wAgg.unpersist()
-    // exact verify of the surviving rep pairs: sizes ride on the
-    // candidate rows — the intersection count is the only aggregate
-    // left (same integers, same double division as the shared
-    // exactJaccard path). The set restore (distinct) runs over the
-    // candidate slice only, never the full membership stream.
-    val candDocs = candidates
-      .select(explode(array(col("id_a"), col("id_b"))).as("doc_id")).distinct()
-    val candShingles = itemRows
-      .join(graft.operators.Broadcasts.maybeBroadcast(candDocs),
-        Seq("doc_id"), "left_semi")
-      .distinct()
-      .persist(memLevel)
-    val inter = candidates
-      .join(candShingles.select(col("doc_id").as("id_a"), col("s")), Seq("id_a"))
-      .join(candShingles.select(col("doc_id").as("id_b"), col("s")),
-        Seq("id_b", "s"))
-      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("__ni"))
-    val jac = candidates
-      .join(inter, Seq("id_a", "id_b"), "left")
-      .withColumn("__ni", coalesce(col("__ni"), lit(0L)))
-      .select(col("id_a"), col("id_b"),
-        (col("__ni").cast("double") /
-          (col("__sza") + col("__szb") - col("__ni"))).as("jaccard"))
-      .localCheckpoint(true)
-    candShingles.unpersist()
-    itemRows.unpersist()
-    val repPairs = jac.filter(col("jaccard") >= jaccardThreshold)
-      .select("id_a", "id_b", "jaccard")
+    val candidates = bandCandidates(
+      bandRows(sig.filter(col("doc_id") === col("rep")), bands, rows),
+      jaccardThreshold, Int.MaxValue)
+    sig.unpersist()
+    val repPairs = overlap(candidates, sets, jaccardOf >= jaccardThreshold)
+      .select(col("id_a"), col("id_b"), jaccardOf.as("jaccard"))
+    sets.unpersist()
     // expansion: verified rep pairs fan back out to member pairs;
     // identical-set (intra-group) pairs ARE the output's quadratic term
     // and are emitted directly at their exact jaccard of 1.0 (the
@@ -253,132 +215,40 @@ object DedupOps {
     * lists; a pair is missed only if EVERY shared shingle is more common
     * than the cap, which for a high-containment pair means the contained
     * doc consists entirely of boilerplate-frequency shingles. Cost at
-    * scale: Σ_shingle df² over capped lists — the standard trade. */
+    * scale: Σ_shingle df² over capped lists — the standard trade. The
+    * candidates then go through the shared exact verify ([[overlap]]). */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
                        shingleSize: Int = 3, containmentThreshold: Double = 0.8,
                        maxShingleDf: Int = 1000,
                        minSharedShingles: Int = 1): DataFrame = {
-    val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val shingleRows = shingleStream(df, idCol, textCol, shingleSize).persist(mem)
-    val sets = shingleRows.distinct().persist(mem) // set semantics per doc
+    val sets = shingleSet(df, idCol, textCol, shingleSize).persist(memDisk)
     val rare = sets.groupBy(col("s")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxShingleDf).select("s")
     val kept = sets.join(rare, Seq("s"))
+    val sizes = sets.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     // minSharedShingles > 1 prunes low-vocabulary corpora where nearly
     // every pair shares SOME shingle (candidates degenerate toward
     // all-pairs); a contained doc with >= minSharedShingles shingles is
     // unaffected, so only docs smaller than the floor can be missed
-    // eager checkpoint: exactJaccard fans out over the candidate set,
-    // and each branch would otherwise replay the inverted-index
-    // self-join + shared-count aggregate (the q34-family lesson)
     val candidates = kept.as("a").join(kept.as("b"), Seq("s"))
       .filter(col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .agg(count(lit(1)).as("__shared"))
       .filter(col("__shared") >= minSharedShingles)
-      .select("id_a", "id_b")
-      .localCheckpoint(true)
-    // hand exactJaccard the already-distinct persisted sets frame: the
-    // internal set-restore shuffle is skipped outright (round-16; was a
-    // cache-read distinct before)
-    val jac = exactJaccard(candidates, sets, inputDistinct = true)
-    shingleRows.unpersist()
+      .join(sizes.select(col("doc_id").as("id_a"), col("sz").as("sz_a")), "id_a")
+      .join(sizes.select(col("doc_id").as("id_b"), col("sz").as("sz_b")), "id_b")
+      .select("id_a", "id_b", "sz_a", "sz_b")
+    val containA = col("n_inter").cast("double") / col("sz_a")
+    val containB = col("n_inter").cast("double") / col("sz_b")
+    val verified = overlap(candidates, sets,
+      greatest(containA, containB) >= containmentThreshold)
     sets.unpersist()
-    jac.filter(greatest(col("containment_a"), col("containment_b")) >= containmentThreshold)
-      .select("id_a", "id_b", "jaccard", "containment_a", "containment_b")
+    verified.select(col("id_a"), col("id_b"), jaccardOf.as("jaccard"),
+      containA.as("containment_a"), containB.as("containment_b"))
   }
 
-  /** Shared LSH candidate + exact-verify pipeline behind [[minhashLsh]] /
-    * [[containmentPairs]]. The whole pipeline is row-oriented — no array
-    * columns, no higher-order functions. HOF lambdas (`transform`/
-    * `array_min`/`array_intersect`) evaluate interpreted at ~100μs/element;
-    * at any scale the winning shape is explode → window → codegen'd
-    * joins/aggs with map-side combine. Measured on 5k docs: 14s (HOF) →
-    * ~3s (this). Returns ALL verified candidates with jaccard and both
-    * containments, eagerly checkpointed (see exactJaccard contract). */
-  private def lshVerified(df: DataFrame, idCol: String, textCol: String,
-                          shingleSize: Int, bands: Int, rows: Int,
-                          maxBucketSize: Int = 256): DataFrame = {
-    val shingleRows = shingleStream(df, idCol, textCol, shingleSize)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // persist the signatures too: the band self-join consumes `banded`
-    // from BOTH sides, and without materialization each side replays
-    // the full min-aggregate (bands·rows salted md5 minima over every
-    // shingle row) — the pipeline's dominant stage (same lesson,
-    // measured on the set variant: 47 s -> ~7 s at sf0.1)
-    val banded = bandedSignatures(shingleRows, bands, rows)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // Candidate pairs, deduped across bands BEFORE verification (a pair
-    // colliding in 3 bands verifies once), eagerly materialized so
-    // exactJaccard's several consumers don't replay the band join.
-    //
-    // HOT-BUCKET GUARD (`maxBucketSize`): within one (band, band_hash)
-    // bucket the self-join pairs ALL members — correct, but a
-    // pathological corpus (millions of byte-identical boilerplate docs
-    // share every band hash) makes one bucket quadratic. Buckets larger
-    // than `maxBucketSize` switch to STAR topology: every member pairs
-    // only with the bucket's minimum doc_id — O(size) candidates, and
-    // near-identical members still verify at jaccard ≈ 1 against the
-    // star center, so keeper-based dedup and [[nearDupClusters]]
-    // connectivity are preserved (the component stays connected through
-    // the center). Recall effect, documented: a non-center pair inside
-    // an oversized bucket is emitted only if some OTHER bucket ≤ the cap
-    // also holds it — for the threshold-grade pairs the S-curve targets,
-    // oversized buckets are precisely the near-identical clumps where
-    // the star already witnesses every membership. The default is ON
-    // at 256 (round-13: the safe default — a 100 TB pipeline that
-    // skips the exact-dedup-first composition must not get a silent
-    // quadratic bucket; worst per-bucket cost is now 256² ≈ 65k
-    // pairs, and at every measured operating point on the synthetic
-    // corpus the largest bucket is far below the cap, so the pinned
-    // q34/q63/q141 pair sets are byte-unchanged). Pass Int.MaxValue
-    // to opt OUT (the pre-r13 behavior; then the supported degenerate-
-    // corpus composition is exact-dedup FIRST ([[exact]]), LSH over
-    // keepers). With the cap off the window pass is skipped entirely;
-    // with it on, both window functions share one unordered frame over
-    // the join key (a single WindowExec on the exchange the join
-    // needs anyway).
-    var sizedCache: Option[DataFrame] = None
-    val rawPairs =
-      if (maxBucketSize == Int.MaxValue)
-        banded.as("a").join(banded.as("b"), Seq("band", "band_hash"))
-          .filter(col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      else {
-        require(maxBucketSize >= 2,
-          s"maxBucketSize must be >= 2, got $maxBucketSize")
-        val bw = Window.partitionBy(col("band"), col("band_hash"))
-        val sized = banded
-          .withColumn("__bsz", count(lit(1)).over(bw))
-          .withColumn("__bmin", min(col("doc_id")).over(bw))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        sizedCache = Some(sized)
-        val small = sized.filter(col("__bsz") <= maxBucketSize)
-          .select(col("doc_id"), col("band"), col("band_hash"))
-        val allPairs = small.as("a").join(small.as("b"), Seq("band", "band_hash"))
-          .filter(col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        val starPairs = sized.filter(col("__bsz") > maxBucketSize)
-          .filter(col("doc_id") =!= col("__bmin"))
-          .select(col("__bmin").as("id_a"), col("doc_id").as("id_b"))
-        allPairs.union(starPairs)
-      }
-    val candidates = rawPairs
-      .distinct()
-      .localCheckpoint(true)
-    sizedCache.foreach(_.unpersist())
-    banded.unpersist()
-
-    val jac = exactJaccard(candidates, shingleRows)
-    shingleRows.unpersist()
-    jac
-  }
-
-  /** Stage 1 of the MinHash operators: one (doc_id, s) row per word
-    * n-gram (NOT deduped — a MinHash minimum over the multiset equals the
-    * minimum over the set, so the global distinct shuffle is unnecessary;
-    * set semantics are restored later, only over candidate documents).
+  /** Stage 0 of the text operators: one (doc_id, s) row per word n-gram
+    * (NOT deduped — callers that need set semantics take [[shingleSet]]).
     * posexplode evaluates the tokenizer once per document (codegen'd
     * generator); `lead` over the doc window forms the n-grams. Public so
     * a pipeline can persist the stream alongside its signature table. */
@@ -393,76 +263,194 @@ object DedupOps {
       .filter(col("complete")).drop("complete")
   }
 
-  /** Stage 2: banded MinHash signatures — bands×rows salted md5 minima
-    * per doc, one hash-agg keyed by doc_id (partitioning carries over
-    * from the shingle window, so no extra exchange); then tiny
-    * (doc_id, band, band_hash) rows. Public so an incremental pipeline
-    * can materialize the corpus signature table once and join new
-    * batches against it ([[incrementalDedup]]).
-    *
-    * Round-16 note (§1 measure first): a long-order-key rewrite of the
-    * minima (two `conv` halves per salt, sign-flipped so the aggregate
-    * stays in codegen HashAggregate, hex re-rendered after — the sets
-    * variant's win) was implemented and PAIRED-MEASURED HERE AT ~1 s
-    * SLOWER (noop sink, interleaved reps: 1.0-1.5 s string form vs
-    * 1.9-2.3 s long form on the 260k-shingle / 5k-doc corpus): with
-    * only thousands of groups the SortAggregate is cheap, while the
-    * extra per-row md5/conv work runs over every shingle. The string
-    * form stays; the sets path ([[minhashLshSets]]) keeps its long
-    * minima where the 147k-group aggregate made them win. */
-  def bandedSignatures(shingleRows: DataFrame, bands: Int, rows: Int): DataFrame = {
-    val numHashes = bands * rows
-    val sigCols = (0 until numHashes).map(i =>
-      min(substring(md5(concat(col("s"), lit(s"#$i"))), 1, 16)).as(s"h$i"))
-    shingleRows.groupBy(col("doc_id")).agg(sigCols.head, sigCols.tail: _*)
-      .select(col("doc_id"),
-        posexplode(array((0 until bands).map(b =>
-          md5(concat_ws("|", (0 until rows).map(r => col(s"h${b * rows + r}")): _*))): _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_hash")
+  /** A text corpus as the core's distinct (doc_id, s) memberships. The
+    * shingle window leaves the stream hash-partitioned by doc_id, which
+    * already satisfies the distinct's (doc_id, s) clustering — the set
+    * restore costs a map-side hash aggregate, no exchange. Documents
+    * shorter than the shingle size have no rows. */
+  private def shingleSet(df: DataFrame, idCol: String, textCol: String,
+                         shingleSize: Int): DataFrame =
+    shingleStream(df, idCol, textCol, shingleSize).distinct()
+
+  /** The salted-md5 minhash, in its two measured forms. Both order items
+    * alike (the min of the 15-hex prefixes is the prefix of the 16-hex
+    * min), so they pick the same candidates and differ only on a 60-bit
+    * tie; the q34 and q245 oracles use one each. Which one is cheaper
+    * depends on where the hashing runs:
+    *  - per membership row (text, [[bandedSignatures]]): the first 16 hex
+    *    digits as a STRING. Paired in one JVM at sf0.1 (260k shingle rows
+    *    × 16 salts, 4 cores, noop sink, 5 interleaved reps): string
+    *    minima 2.1 s, 60-bit BIGINT minima 3.3 s — the `conv` runs once
+    *    per row and costs more than the sort-based string aggregate
+    *    saves (round 16 measured the same gap with two conv halves);
+    *  - per distinct item ([[minhashLshSets]]): the first 15 hex digits as
+    *    a 60-bit BIGINT. The conv runs over the item vocabulary only, and
+    *    long minima keep the 150k-set aggregate in codegen HashAggregate
+    *    (round 16 measured them the winner there). */
+  private def hexHash(item: Column, salt: String): Column =
+    substring(md5(concat(item, lit(salt))), 1, 16)
+
+  private def longHash(item: Column, salt: String): Column =
+    conv(substring(md5(concat(item, lit(salt))), 1, 15), 16, 10).cast("long")
+
+  /** The `n` signature hashes of `item`, as columns __x0 … __x{n-1}. */
+  private def hashColumns(item: Column, n: Int,
+                          hash: (Column, String) => Column): Seq[Column] =
+    (0 until n).map(i => hash(item, s"#$i").as(s"__x$i"))
+
+  /** The signature aggregate over hashed memberships (doc_id, __x0 …):
+    * per doc the minima h0 … h{n-1} and the set size `sz` (the rows must
+    * be distinct memberships), plus any `extra` aggregates riding the
+    * same pass. */
+  private def signature(hashed: DataFrame, numHashes: Int,
+                        extra: Column*): DataFrame = {
+    val aggs = (0 until numHashes).map(i => min(col(s"__x$i")).as(s"h$i")) ++
+      (count(lit(1)).as("sz") +: extra)
+    hashed.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Exact Jaccard for an explicit (id_a, id_b) candidate set via set
-    * algebra on shingle rows, restricted FIRST to candidate documents (a
-    * semi-join against the tiny candidate id set) — at scale only the
-    * near-dup slice of the corpus is deduped and joined, never the whole
-    * shingle stream. |A∩B| from an equi-join on the shingle string;
-    * |A∪B| = |A|+|B|−|A∩B|. Returns ALL candidates with their jaccard,
-    * eagerly checkpointed (the set is small by construction) with the
-    * internal candidate-shingle cache released before returning.
-    * `inputDistinct = true` declares `shingleRows` already (doc_id, s)
-    * -distinct, skipping the internal set-restore shuffle (round-16:
-    * the sets/containment callers hand over distinct frames). */
-  private def exactJaccard(candidates: DataFrame, shingleRows: DataFrame,
-                           inputDistinct: Boolean = false): DataFrame = {
-    val candDocs = candidates.select(explode(array(col("id_a"), col("id_b"))).as("doc_id"))
-      .distinct()
-    val semi = shingleRows
-      .join(graft.operators.Broadcasts.maybeBroadcast(candDocs), Seq("doc_id"), "left_semi")
-    val candShingles =
-      (if (inputDistinct) semi
-       else semi.distinct()) // set semantics, now only over candidate docs
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sizes = candShingles.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-    val aSh = candShingles.select(col("doc_id").as("id_a"), col("s"))
-    val bSh = candShingles.select(col("doc_id").as("id_b"), col("s"))
-    val inter = candidates.join(aSh, "id_a").join(bSh, Seq("id_b", "s"))
-      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("n_inter"))
-    val result = candidates
-      .join(inter, Seq("id_a", "id_b"), "left")
-      .withColumn("n_inter", coalesce(col("n_inter"), lit(0L)))
-      .join(sizes.select(col("doc_id").as("id_a"), col("sz").as("sz_a")), "id_a")
-      .join(sizes.select(col("doc_id").as("id_b"), col("sz").as("sz_b")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        (col("n_inter").cast("double") /
-          (col("sz_a") + col("sz_b") - col("n_inter"))).as("jaccard"),
-        (col("n_inter").cast("double") / col("sz_a")).as("containment_a"),
-        (col("n_inter").cast("double") / col("sz_b")).as("containment_b"))
-      // eager: materialize the (small) verified pair set, then drop the
-      // big intermediate cache — see the materialization contract above
-      .localCheckpoint(true)
-    candShingles.unpersist()
-    result
+  /** One (doc_id, sz, band, band_hash) row per band of a signature frame;
+    * the band hash is md5 over the band's '|'-joined minima (decimal
+    * renderings of the BIGINT form). */
+  private def bandRows(sig: DataFrame, bands: Int, rows: Int): DataFrame =
+    sig.select(col("doc_id"), col("sz"),
+        posexplode(array((0 until bands).map(b =>
+          md5(concat_ws("|", (0 until rows).map(r =>
+            col(s"h${b * rows + r}").cast("string")): _*))): _*)))
+      .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_hash")
+
+  /** Stage 1: banded MinHash signatures of distinct (doc_id, s)
+    * memberships — bands×rows salted md5 minima ([[hexHash]], hashed per
+    * row: a text corpus has about as many distinct shingles as
+    * memberships) and the set size per doc, one aggregate keyed by doc_id
+    * (a [[shingleSet]] input is already doc-partitioned, so no extra
+    * exchange); then tiny (doc_id, sz, band, band_hash) rows. Public so an
+    * incremental pipeline can materialize the corpus signature table once
+    * and join new batches against it ([[signatureWrite]]). */
+  def bandedSignatures(shingleRows: DataFrame, bands: Int, rows: Int): DataFrame = {
+    val numHashes = bands * rows
+    bandRows(signature(
+      shingleRows.select(col("doc_id") +: hashColumns(col("s"), numHashes, hexHash): _*),
+      numHashes), bands, rows)
   }
+
+  /** Stage 2: band-bucket candidate pairs (id_a, id_b, sz_a, sz_b) — doc
+    * pairs sharing a (band, band_hash) bucket and passing `pairRule`
+    * (over the `a`/`b` join sides; default: each unordered pair once).
+    * `banded` is persisted here: the self-join consumes it from BOTH
+    * sides, and without it each side replays the signature aggregate —
+    * the pipeline's dominant stage (measured on the set variant: 47 s ->
+    * ~7 s at sf0.1).
+    *
+    * SIZE-RATIO PREFILTER (§3.2-style semi-reduction): jaccard(A,B) ≤
+    * min(|A|,|B|)/max(|A|,|B|) with equality exactly at the subset case,
+    * and the bound evaluates in the same double division the verify
+    * measure uses (IEEE division is monotone, so a pair failing the bound
+    * can never reach the threshold) — candidates failing it skip the
+    * intersection join entirely, and every caller filters at
+    * `jaccardThreshold`, so outputs are provably unchanged (measured
+    * 199k → 133k verified rep pairs on q245 at sf0.1). It runs before
+    * the dedup exchange, and one eager checkpoint materializes the
+    * candidate set so the cached signature rows are released before this
+    * returns.
+    *
+    * HOT-BUCKET GUARD (`maxBucketSize`): within one (band, band_hash)
+    * bucket the self-join pairs ALL members — correct, but a
+    * pathological corpus (millions of byte-identical boilerplate docs
+    * share every band hash) makes one bucket quadratic. Buckets larger
+    * than `maxBucketSize` switch to STAR topology: every member pairs
+    * only with the bucket's minimum doc_id — O(size) candidates, and
+    * near-identical members still verify at jaccard ≈ 1 against the
+    * star center, so keeper-based dedup and [[nearDupClusters]]
+    * connectivity are preserved (the component stays connected through
+    * the center). Recall effect, documented: a non-center pair inside
+    * an oversized bucket is emitted only if some OTHER bucket ≤ the cap
+    * also holds it — for the threshold-grade pairs the S-curve targets,
+    * oversized buckets are precisely the near-identical clumps where
+    * the star already witnesses every membership. [[minhashLsh]]
+    * defaults it ON at 256 (round-13: a 100 TB pipeline that skips the
+    * exact-dedup-first composition must not get a silent quadratic
+    * bucket; worst per-bucket cost is 256² ≈ 65k pairs, and at every
+    * measured operating point on the synthetic corpus the largest
+    * bucket is far below the cap, so the pinned q34/q63/q141 pair sets
+    * are unchanged). Int.MaxValue turns it off (the pre-r13 behavior;
+    * the degenerate-corpus composition is then exact-dedup FIRST
+    * ([[exact]]), LSH over keepers) and skips the window pass; with it
+    * on, both window functions share one unordered frame over the join
+    * key (a single WindowExec on the exchange the join needs anyway).
+    * The star pairs follow the default rule only: callers with their
+    * own `pairRule` run with the guard off. */
+  private def bandCandidates(banded: DataFrame, jaccardThreshold: Double,
+                             maxBucketSize: Int,
+                             pairRule: Column = col("a.doc_id") < col("b.doc_id")): DataFrame = {
+    val cached = banded.persist(memDisk)
+    def pairs(side: DataFrame): DataFrame =
+      side.as("a").join(side.as("b"), Seq("band", "band_hash"))
+        .filter(pairRule)
+        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
+          col("a.sz").as("sz_a"), col("b.sz").as("sz_b"))
+    var sizedCache: Option[DataFrame] = None
+    val rawPairs =
+      if (maxBucketSize == Int.MaxValue) pairs(cached)
+      else {
+        require(maxBucketSize >= 2,
+          s"maxBucketSize must be >= 2, got $maxBucketSize")
+        val bw = Window.partitionBy(col("band"), col("band_hash"))
+        val sized = cached
+          .withColumn("__bsz", count(lit(1)).over(bw))
+          .withColumn("__c", min(struct(col("doc_id"), col("sz"))).over(bw))
+          .persist(memDisk)
+        sizedCache = Some(sized)
+        val starPairs = sized.filter(col("__bsz") > maxBucketSize)
+          .filter(col("doc_id") =!= col("__c.doc_id"))
+          .select(col("__c.doc_id").as("id_a"), col("doc_id").as("id_b"),
+            col("__c.sz").as("sz_a"), col("sz").as("sz_b"))
+        pairs(sized.filter(col("__bsz") <= maxBucketSize)
+            .select("doc_id", "sz", "band", "band_hash"))
+          .union(starPairs)
+      }
+    val candidates = rawPairs
+      .filter(least(col("sz_a"), col("sz_b")).cast("double") /
+        greatest(col("sz_a"), col("sz_b")).cast("double") >= jaccardThreshold)
+      .distinct()
+      .localCheckpoint(true)
+    sizedCache.foreach(_.unpersist())
+    cached.unpersist()
+    candidates
+  }
+
+  /** Stage 3, the one exact verify: for candidates (id_a, id_b, sz_a,
+    * sz_b) over distinct (doc_id, s) `memberships`, returns (id_a, id_b,
+    * n_inter, sz_a, sz_b) for the pairs passing `keep`, with n_inter =
+    * |A∩B| from an equi-join on the item. The sizes ride on the candidate
+    * rows as grouping keys, so the intersection count is the only
+    * aggregate. The joins read the caller's (persisted) memberships
+    * directly: AQE broadcasts a small candidate side, so a near-dup
+    * slice never shuffles the stream, and restricting the memberships to
+    * candidate documents first (a semi-join plus a cached slice) measured
+    * slower where candidates span the corpus (q127 at sf0.1: 119k
+    * candidates over 4,996 of 5,000 docs, 2.27 s vs 1.95 s). Every
+    * candidate generator pairs documents through a shared item (a band of
+    * equal minima, a rare shingle, a prefix shingle), so only a hash
+    * collision could yield a pair with no common item, and no `keep` at a
+    * positive threshold admits one. Eagerly checkpointed after `keep`
+    * (the result is the pair-scale output, not the candidate set), so
+    * callers may release their caches as soon as this returns. */
+  private def overlap(candidates: DataFrame, memberships: DataFrame,
+                      keep: Column): DataFrame =
+    candidates
+      .join(memberships.select(col("doc_id").as("id_a"), col("s")), Seq("id_a"))
+      .join(memberships.select(col("doc_id").as("id_b"), col("s")), Seq("id_b", "s"))
+      .groupBy(col("id_a"), col("id_b"), col("sz_a"), col("sz_b"))
+      .agg(count(lit(1)).as("n_inter"))
+      .filter(keep)
+      .select("id_a", "id_b", "n_inter", "sz_a", "sz_b")
+      .localCheckpoint(true)
+
+  /** Exact jaccard of a verified row: |A∩B| / (|A| + |B| − |A∩B|), the
+    * integers divided once in double space. */
+  private def jaccardOf: Column =
+    col("n_inter").cast("double") / (col("sz_a") + col("sz_b") - col("n_inter"))
 
   /** Incremental near-dup dedup: admit only the rows of a NEW `batch`
     * that near-duplicate neither the existing `corpus` nor a smaller-id
@@ -471,68 +459,56 @@ object DedupOps {
     *
     * Candidate generation joins the batch's banded signatures against
     * corpus + batch signatures, so corpus×corpus pairs are never formed:
-    * per-batch cost is |batch|×bands signature rows probing the bucket
-    * index, independent of corpus size. At 100 TB use
-    * [[incrementalDedupIndexed]] against a [[signatureWrite]] index so the
-    * corpus is never re-shingled — the recompute here keeps the operator
-    * self-contained for the oracle gate.
-    * Corpus and batch ids must be disjoint. */
+    * per-batch candidates are |batch|×bands signature rows probing the
+    * bucket index. At 100 TB use [[incrementalDedupIndexed]] against a
+    * [[signatureWrite]] index so the corpus is never re-shingled — the
+    * recompute here keeps the operator self-contained for the oracle
+    * gate. Corpus and batch ids must be disjoint. */
   def incrementalDedup(corpus: DataFrame, batch: DataFrame, idCol: String,
                        textCol: String, shingleSize: Int = 3, bands: Int = 4,
                        rows: Int = 4, jaccardThreshold: Double = 0.7): DataFrame = {
-    val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // ONE shingle+signature pass over corpus∪batch (the expensive window
-    // and 16-way min-agg stages run once, not per side); the sides are
-    // then split with cheap joins against the batch id set — the same
+    // and 16-way min-agg stages run once, not per side); batch rows are
+    // then flagged by a cheap join against the batch id set — the same
     // frame class as a delete+insert key set, size-gate-broadcastable
     val all = corpus.select(col(idCol).as("doc_id"), col(textCol).as("__t"))
       .unionByName(batch.select(col(idCol).as("doc_id"), col(textCol).as("__t")))
-    val sh = shingleStream(all, "doc_id", "__t", shingleSize).persist(mem)
-    val banded = bandedSignatures(sh, bands, rows).persist(mem)
-    val batchIds = batch.select(col(idCol).as("doc_id")).distinct()
-    val bandedBatch = banded.join(
-      graft.operators.Broadcasts.maybeBroadcast(batchIds), Seq("doc_id"), "left_semi")
-    val bandedCorpus = banded.join(
-      graft.operators.Broadcasts.maybeBroadcast(batchIds), Seq("doc_id"), "left_anti")
-    val result = incrementalCore(bandedCorpus, bandedBatch, sh, batch, idCol,
-      jaccardThreshold)
-    sh.unpersist()
-    banded.unpersist()
+    val sets = shingleSet(all, "doc_id", "__t", shingleSize).persist(memDisk)
+    val batchIds = batch.select(col(idCol).as("doc_id"), lit(true).as("__new")).distinct()
+    val banded = bandedSignatures(sets, bands, rows)
+      .join(graft.operators.Broadcasts.maybeBroadcast(batchIds), Seq("doc_id"), "left")
+      .withColumn("__new", coalesce(col("__new"), lit(false)))
+    val result = incrementalCore(banded, sets, batch, idCol, jaccardThreshold)
+    sets.unpersist()
     result
   }
 
-  /** Shared admit logic of [[incrementalDedup]] / [[incrementalDedupIndexed]]:
-    * every candidate involves a batch doc on the id_b side —
-    * (corpus, batch) at any ids; (batch, batch) ordered a < b — so
-    * corpus×corpus pairs are never formed. The exact-Jaccard verify is
-    * EAGER (exactJaccard checkpoints its small result), so callers may
-    * release their caches as soon as this returns. */
-  private def incrementalCore(bandedCorpus: DataFrame, bandedBatch: DataFrame,
-                              allShingles: DataFrame, batch: DataFrame,
-                              idCol: String, jaccardThreshold: Double): DataFrame = {
-    val corpusBatch = bandedCorpus.as("a").join(bandedBatch.as("b"), Seq("band", "band_hash"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-    val batchBatch = bandedBatch.as("a").join(bandedBatch.as("b"), Seq("band", "band_hash"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-    // eager checkpoint: same fan-out rationale as containmentPairs
-    val candidates = corpusBatch.unionByName(batchBatch).distinct()
-      .localCheckpoint(true)
-    val jac = exactJaccard(candidates, allShingles)
-    val dropped = jac.filter(col("jaccard") >= jaccardThreshold)
+  /** Shared admit logic of [[incrementalDedup]] / [[incrementalDedupIndexed]]
+    * over signature rows flagged `__new` for batch docs: every candidate
+    * involves a batch doc on the id_b side — (corpus, batch) at any ids;
+    * (batch, batch) ordered a < b — so corpus×corpus pairs are never
+    * formed (the `b.__new` conjunct is pushed below the band join). The
+    * exact verify is EAGER, so callers may release their caches as soon
+    * as this returns. */
+  private def incrementalCore(banded: DataFrame, memberships: DataFrame,
+                              batch: DataFrame, idCol: String,
+                              jaccardThreshold: Double): DataFrame = {
+    val candidates = bandCandidates(banded, jaccardThreshold, Int.MaxValue,
+      col("b.__new") && (!col("a.__new") || col("a.doc_id") < col("b.doc_id")))
+    val dropped = overlap(candidates, memberships, jaccardOf >= jaccardThreshold)
       .select(col("id_b").as(idCol)).distinct()
     batch.join(graft.operators.Broadcasts.maybeBroadcast(dropped), Seq(idCol), "left_anti")
   }
 
   /** Materialize the LSH signature index on disk — the dedup analog of
     * `Similarity.ivfIndexWrite`, and the real 100 TB growing-corpus shape:
-    * the corpus shingle stream and banded signatures are computed ONCE per
+    * the corpus shingle sets and banded signatures are computed ONCE per
     * corpus load and persisted; every later batch probes the stored bucket
     * index instead of re-running the window + 16-way min-agg over the
     * whole corpus ([[incrementalDedup]]'s self-contained recompute).
-    * Layout: `path/shingles` (doc_id, s — multiset, set semantics restored
-    * at verify time), `path/signatures` (doc_id, band, band_hash).
-    * The shingle stream is written first and READ BACK to derive
+    * Layout: `path/shingles` (doc_id, s — distinct memberships),
+    * `path/signatures` (doc_id, sz, band, band_hash).
+    * The shingle sets are written first and READ BACK to derive
     * signatures, so the expensive tokenize+window stage runs exactly once
     * with no cache pressure. Readers must pass the same (shingleSize,
     * bands, rows) the index was built with. */
@@ -540,7 +516,7 @@ object DedupOps {
                      path: String, shingleSize: Int = 3, bands: Int = 4,
                      rows: Int = 4): Unit = {
     val spark = corpus.sparkSession
-    shingleStream(corpus, idCol, textCol, shingleSize)
+    shingleSet(corpus, idCol, textCol, shingleSize)
       .write.mode("overwrite").parquet(s"$path/shingles")
     bandedSignatures(spark.read.parquet(s"$path/shingles"), bands, rows)
       .write.mode("overwrite").parquet(s"$path/signatures")
@@ -548,10 +524,9 @@ object DedupOps {
 
   /** [[incrementalDedup]] against a materialized [[signatureWrite]] index:
     * only the NEW batch is shingled and signed; the corpus side of the
-    * bucket join and of the exact-Jaccard verify reads the stored tables.
-    * Per-batch cost is |batch|×bands signature rows plus the candidate
-    * slice of the stored shingle table — independent of corpus size.
-    * Same admit rule and result as the self-contained form (spec-proven
+    * bucket join and of the exact verify reads the stored tables (the
+    * stored signature rows are held for the two band-join sides). Same
+    * admit rule and result as the self-contained form (spec-proven
     * equal). Admit the result, then [[signatureAppend]] it to keep the
     * index current. */
   def incrementalDedupIndexed(spark: org.apache.spark.sql.SparkSession,
@@ -559,18 +534,16 @@ object DedupOps {
                               textCol: String, shingleSize: Int = 3,
                               bands: Int = 4, rows: Int = 4,
                               jaccardThreshold: Double = 0.7): DataFrame = {
-    val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val b = batch.select(col(idCol).as("doc_id"), col(textCol).as("__t"))
-    val batchSh = shingleStream(b, "doc_id", "__t", shingleSize).persist(mem)
-    val bandedBatch = bandedSignatures(batchSh, bands, rows).persist(mem)
+    val batchSets = shingleSet(b, "doc_id", "__t", shingleSize).persist(memDisk)
     // live views: tombstoned corpus docs ([[signatureDelete]]) no longer
     // block admission — deleted content must not suppress new batches
-    val corpusSh = liveIndexTable(spark, path, "shingles")
-    val bandedCorpus = liveIndexTable(spark, path, "signatures")
-    val result = incrementalCore(bandedCorpus, bandedBatch,
-      corpusSh.unionByName(batchSh), batch, idCol, jaccardThreshold)
-    batchSh.unpersist()
-    bandedBatch.unpersist()
+    val banded = liveIndexTable(spark, path, "signatures").withColumn("__new", lit(false))
+      .unionByName(bandedSignatures(batchSets, bands, rows).withColumn("__new", lit(true)))
+    val result = incrementalCore(banded,
+      liveIndexTable(spark, path, "shingles").unionByName(batchSets),
+      batch, idCol, jaccardThreshold)
+    batchSets.unpersist()
     result
   }
 
@@ -632,7 +605,7 @@ object DedupOps {
                       path: String, shingleSize: Int = 3, bands: Int = 4,
                       rows: Int = 4): Unit = {
     val a = admitted.select(col(idCol).as("doc_id"), col(textCol).as("__t"))
-    val sh = shingleStream(a, "doc_id", "__t", shingleSize).localCheckpoint(true)
+    val sh = shingleSet(a, "doc_id", "__t", shingleSize).localCheckpoint(true)
     sh.write.mode("append").parquet(s"$path/shingles")
     bandedSignatures(sh, bands, rows).write.mode("append").parquet(s"$path/signatures")
   }
@@ -823,8 +796,7 @@ object DedupOps {
     * reference set is shuffle-joined, never collected), one per-doc
     * count aggregate with map-side combine. Documents shorter than
     * the shingle size have no windows and are absent from the output
-    * (callers treat them as undefined novelty, the [[shingles]] empty
-    * rule). */
+    * (callers treat them as undefined novelty: an empty shingle set). */
   def ngramNovelty(ref: DataFrame, cur: DataFrame, idCol: String,
                    textCol: String, shingleSize: Int = 3): DataFrame = {
     val refSet = shingleStream(ref, idCol, textCol, shingleSize)
@@ -915,12 +887,6 @@ object DedupOps {
             / col("n_windows"))
           .as("dup_window_fraction"))
   }
-
-  /** N-gram Jaccard similarity for an explicit candidate pair set
-    * (exact verification path; used standalone on pre-blocked pairs). */
-  def jaccard(shA: Column, shB: Column): Column =
-    when(size(array_union(shA, shB)) === 0, 0.0).otherwise(
-      size(array_intersect(shA, shB)).cast("double") / size(array_union(shA, shB)))
 
   /** 64-bit SimHash fingerprint (Charikar 2002): per-token md5-derived
     * 64-bit hash; fingerprint bit b is the sign of Σ_tokens (±1 by token
@@ -1074,24 +1040,25 @@ object DedupOps {
     * integer arithmetic, so the emitted (overlap, union_size) pair is
     * bit-exact on any engine.
     *
-    * Shape at 100 TB: shingle stream -> distinct (one shuffle on the
-    * shingle), df counts reuse that partitioning, per-doc ranking is one
-    * key shuffle, the candidate join hashes prefix shingles only, and
-    * verification expands candidate pairs — never the corpus. The df
-    * table doubles as the place to DROP stop-shingles (df above a cap)
-    * entirely at prefix time if a corpus has pathological hot shingles.
+    * Shape at 100 TB: shingle sets (the distinct needs no exchange of
+    * its own), df counts are one shuffle on the shingle, per-doc ranking
+    * is one key shuffle, the candidate join hashes prefix shingles only,
+    * and the shared exact verify ([[overlap]]) expands candidate pairs
+    * only — never all pairs. The set sizes ride
+    * on the prefix rows, so no size join is needed. The df table doubles
+    * as the place to DROP stop-shingles (df above a cap) entirely at
+    * prefix time if a corpus has pathological hot shingles.
     */
   def prefixJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                          shingleSize: Int = 3,
                          tNum: Int = 1, tDen: Int = 2): DataFrame = {
     require(tNum > 0 && tDen >= tNum, s"threshold must be in (0,1]: $tNum/$tDen")
-    // the shingle stream feeds FIVE consumers (df-count join sides,
-    // doc sizes, both overlap probe sides) and the prefix frame its
-    // own self-join — persist both or every consumer replays the full
-    // tokenize+shingle lineage (the measured minhash-family trap)
-    val sh = shingleStream(df, idCol, textCol, shingleSize).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val withDf = sh.join(sh.groupBy("s").agg(count(lit(1)).as("__df")), "s")
+    // the shingle sets feed the df-count join sides and the verify, and
+    // the prefix frame its own self-join — persist both or every
+    // consumer replays the full tokenize+shingle lineage (the measured
+    // minhash-family trap)
+    val sets = shingleSet(df, idCol, textCol, shingleSize).persist(memDisk)
+    val withDf = sets.join(sets.groupBy("s").agg(count(lit(1)).as("__df")), "s")
     val byDoc = Window.partitionBy(col("doc_id"))
     val ranked = withDf
       .withColumn("__n", count(lit(1)).over(byDoc))
@@ -1100,32 +1067,20 @@ object DedupOps {
       // ceil(t*n) = (tNum*n + tDen - 1) DIV tDen, all integer
       .withColumn("__pfx", expr(
         s"__rk <= __n - ((${tNum}L * __n + ${tDen - 1}L) DIV ${tDen}L) + 1"))
-    val prefixes = ranked.filter(col("__pfx")).select("doc_id", "s")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cand = prefixes.as("a").join(prefixes.as("b"),
+    val prefixes = ranked.filter(col("__pfx")).select("doc_id", "s", "__n")
+      .persist(memDisk)
+    val candidates = prefixes.as("a").join(prefixes.as("b"),
         col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
+        col("a.__n").as("sz_a"), col("b.__n").as("sz_b"))
       .distinct()
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("__sz"))
-    val aSh = sh.select(col("doc_id").as("id_a"), col("s"))
-    val bSh = sh.select(col("doc_id").as("id_b"), col("s"))
-    val overlap = cand.join(aSh, "id_a").join(bSh, Seq("id_b", "s"))
-      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("overlap"))
-    val out = overlap
-      .join(graft.operators.Broadcasts.maybeBroadcast(
-        sizes.select(col("doc_id").as("id_a"), col("__sz").as("__na"))), "id_a")
-      .join(graft.operators.Broadcasts.maybeBroadcast(
-        sizes.select(col("doc_id").as("id_b"), col("__sz").as("__nb"))), "id_b")
-      .filter(lit(tDen.toLong) * col("overlap") >=
-        lit(tNum.toLong) * (col("__na") + col("__nb") - col("overlap")))
-      .select(col("id_a"), col("id_b"), col("overlap"),
-        (col("__na") + col("__nb") - col("overlap")).as("union_size"))
-      // eager pair-scale result, then release the two big caches
-      // (the lshVerified materialization contract)
-      .localCheckpoint(true)
-    sh.unpersist()
+    val unionSize = col("sz_a") + col("sz_b") - col("n_inter")
+    val verified = overlap(candidates, sets,
+      lit(tDen.toLong) * col("n_inter") >= lit(tNum.toLong) * unionSize)
+    sets.unpersist()
     prefixes.unpersist()
-    out
+    verified.select(col("id_a"), col("id_b"), col("n_inter").as("overlap"),
+        unionSize.as("union_size"))
   }
 
   /** EXACT edit-distance near-dup pairs — the AUDIT TOOL, not the
@@ -1392,9 +1347,10 @@ object DedupOps {
                            maxSourcesPerShingle: Option[Int] = None): DataFrame = {
     // shingleStream's posexplode+lead shape, with the source carried and
     // the per-doc window keyed on a synthesized doc id (the operator's
-    // contract takes only source+text; the id never escapes). The
-    // convenience shingles() column is the documented O(tokens²) trap —
-    // measured 10 s → 1.4 s at sf0.1 on this operator alone. collect_set
+    // contract takes only source+text; the id never escapes). An
+    // array-of-shingles column is the O(tokens²) trap documented on
+    // shinglesFromTokens — measured 10 s → 1.4 s at sf0.1 on this
+    // operator alone. collect_set
     // dedups (shingle, source) downstream, so the stream needs no
     // per-doc distinct.
     val w = Window.partitionBy(col("__doc")).orderBy(col("pos"))

@@ -218,7 +218,7 @@ object Robust {
     val obs = df.groupBy(col(variantCol))
       .agg(count(lit(1)).as("n_obs"))
     val total = obs.agg(sum(col("n_obs")).cast("long").as("__total"))
-    obs.join(Broadcasts.maybeBroadcast(design), Seq(variantCol), "full_outer")
+    obs.join(design, Seq(variantCol), "full_outer")
       .withColumn("n_obs", coalesce(col("n_obs"), lit(0L)))
       .crossJoin(broadcast(total))
       .withColumn("__tn",

@@ -288,8 +288,12 @@ private[graft] object QuerySupport {
   val mhRows = 4
 
   /** Shared minhash CTE machinery parameterized by the `shingled` CTE
-    * body (doc_id, sh) — the document path supplies shingle lists, the
-    * set path ([[q245|minhashLshSets]]) supplies item lists. */
+    * body (doc_id, sh) — [[minhashPairsCtesWhere]] supplies the
+    * documents' shingle lists. Its 16-hex string minima pick the same
+    * candidates as the engine's 60-bit BIGINT minima (the min of the
+    * 15-hex prefixes is the prefix of the 16-hex min; they differ only
+    * on a 60-bit tie). q245's set-path oracle builds its own BIGINT
+    * chain instead (Round6Queries). */
   def minhashPairsCtesFrom(shingledCte: String, thr: String): String = {
     val sig = (0 until mhBands * mhRows).map(i =>
       s"list_aggregate(list_transform(sh, s -> substr(md5(s || '#$i'), 1, 16)), 'min')")
