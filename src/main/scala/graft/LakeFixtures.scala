@@ -560,8 +560,10 @@ object LakeFixtures {
     * "median" (the r12 q413 n=1 artifact: 0.74 s quiet vs 43 s with
     * the Hilbert lake build folded in). Idempotent via [[once]]. */
   def warmAll(s: SparkSession, d: String): Unit = {
+    // NonFatal only, as in CrossChecks.warmAll: a fatal JVM error must
+    // propagate, not resurface inside the timed rep it was meant to spare.
     def quiet(b: => String): Unit =
-      try { b; () } catch { case _: Throwable => () }
+      try { b; () } catch { case scala.util.control.NonFatal(_) => () }
     quiet(morton3dLineitem(s, d)); quiet(hilbert3dLineitem(s, d))
     quiet(raw16Lineitem(s, d)); quiet(clustered2dLineitem(s, d))
     quiet(flagPartitionedLineitem(s, d)); quiet(ordersDateSorted(s, d))

@@ -1,8 +1,11 @@
 package graft.incremental
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.plans.logical.RebalancePartitions
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.GraftGlue
 
 /** Incremental-load semantics (SURVEY.md §2.8, §7.1 module 5):
   * high-watermark filters, idempotent writer policies, and the
@@ -15,9 +18,12 @@ object Watermark {
     * gold_daily_summary.sql:17-19). Late rows ≤ watermark are silently
     * dropped — intentional reference semantics (SURVEY.md §7.4 item 7).
     *
-    * One scalar aggregate is collected to the driver (a single row — the
-    * only driver-side collect in the engine); at 100 TB the max() is a
-    * column-stats scan over the small existing target, not the source. */
+    * One scalar aggregate is collected to the driver (a single row). The
+    * max() scans the timestamp column of the whole existing target, not
+    * its file statistics: Spark writes timestamps as INT96, which carry
+    * no min/max statistics (silver `tpep_pickup_datetime` has none; a
+    * DATE column such as gold_daily `trip_date` does), and Spark's v1
+    * parquet source does not answer aggregates from statistics anyway. */
   def strictlyAfterMax(src: DataFrame, existing: Option[DataFrame], tsCol: String,
                        existingTsCol: Option[String] = None): DataFrame =
     existing.flatMap(e =>
@@ -48,15 +54,38 @@ object Watermark {
 object Writers {
   import org.apache.spark.sql.SaveMode
 
+  /** The size one written data file aims at: [[compact]] and
+    * [[compactIfFragmented]] size files by it, and the month writers hand
+    * it to AQE as the rebalance's advisory partition size, so writing and
+    * compaction aim at one size. */
+  private val TargetFileBytes: Long = 128L << 20
+
+  /** `df` rebalanced on `by`: each value of `by` goes to one write task,
+    * which AQE splits only past [[TargetFileBytes]] of shuffled rows, so a
+    * partitioned write lands one file per partition value up to that size,
+    * instead of one per upstream task. The shuffle runs inside the writing
+    * query; nothing is read back and rewritten. */
+  private def rebalanced(df: DataFrame, by: Column): DataFrame = {
+    // `by` resolved against df's own plan, as a select would resolve it
+    val key = df.select(by).queryExecution.analyzed.expressions.head match {
+      case a: Alias => a.child
+      case e        => e
+    }
+    GraftGlue.ofRows(df.sparkSession, RebalancePartitions(Seq(key),
+      df.queryExecution.analyzed, optAdvisoryPartitionSize = Some(TargetFileBytes)))
+  }
+
   /** S7 — full rebuild (dbt `table` materialization). */
   def fullRebuild(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(path)
 
   /** S8/S10 — month-partitioned write with dynamic partition overwrite:
     * only the month partitions present in `df` are replaced (idempotent
-    * re-load of a month; reference: nyc_taxi_pipeline.py:130-135). */
+    * re-load of a month; reference: nyc_taxi_pipeline.py:130-135). Each
+    * month is written [[rebalanced]], at its compacted file count. */
   def monthOverwrite(df: DataFrame, path: String, tsCol: String): Unit =
-    df.withColumn("pickup_month", date_format(col(tsCol), "yyyy-MM"))
+    rebalanced(df.withColumn("pickup_month", date_format(col(tsCol), "yyyy-MM")),
+        col("pickup_month"))
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("pickup_month")
@@ -122,34 +151,42 @@ object Writers {
     * a home — dropping them silently or NPE-ing on the partition key are
     * both data loss).
     *
-    * The merge is eagerly checkpointed before any partition swap: the
-    * swaps are destructive (delete + rename), and a lazily-cached plan
-    * whose lineage still references the pre-swap file listing would
-    * recompute against deleted files if a cached block is lost mid-loop. */
+    * `incoming` is evaluated once: it is eagerly checkpointed, and both
+    * the affected-month collect and the merge read the checkpoint (for
+    * silver and the month-grained golds, `incoming` is a whole layer
+    * transform). The merge is eagerly checkpointed before any partition
+    * swap: the swaps are destructive (delete + rename), and a
+    * lazily-cached plan whose lineage still references the pre-swap file
+    * listing would recompute against deleted files if a cached block is
+    * lost mid-loop. Each swap writes its month [[rebalanced]], so the
+    * partition lands at its compacted file count in the writing job. */
   def monthScopedDeleteInsert(existing: Option[DataFrame], incoming: DataFrame,
                               keys: Seq[String], tsCol: String, path: String,
                               partCol: String = "pickup_month"): Unit = {
     val monthOf = coalesce(date_format(col(tsCol), "yyyy-MM"), lit("0000-00"))
-    val affected = incoming.select(monthOf.as("__m")).distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
+    // (checkpoint blocks are freed by the ContextCleaner once the frames
+    // are unreachable — Dataset.unpersist does not reach RDD-level
+    // checkpoint storage, so no release call is made here)
+    val batch = incoming.localCheckpoint(true)
+    // a distinct per task, then on the driver: one job, no shuffle
+    val affected = batch.select(monthOf).as(Encoders.STRING)
+      .mapPartitions(_.toSet.iterator)(Encoders.STRING)
+      .collect().distinct.toSeq.sorted
     if (affected.isEmpty) return
     // partition-pruned read: only the affected months' files are scanned
     val existingAffected = existing.map(df =>
       df.filter(col(partCol).isin(affected: _*)).drop(partCol))
-    // (checkpoint blocks are freed by the ContextCleaner once `merged`
-    // is unreachable — Dataset.unpersist does not reach RDD-level
-    // checkpoint storage, so no release call is made here)
-    val merged = keyedDeleteInsert(existingAffected, incoming, keys)
+    val merged = keyedDeleteInsert(existingAffected, batch, keys)
       .localCheckpoint(true)
     affected.foreach { m =>
       val dir = s"$path/$partCol=$m"
-      atomicRewrite(merged.filter(monthOf === m), dir)
-      // the swap writes one file per shuffle task; compact-if-fragmented
-      // here (not in the pipeline) because the AFFECTED set is the truth —
-      // a boundary-date re-merge can touch a month the pipeline's nominal
-      // load month doesn't name. Large partitions already at byte-optimal
-      // file count skip the rewrite, so the extra cost concentrates on
-      // exactly the small fragmented partitions where it is cheap.
+      atomicRewrite(rebalanced(merged.filter(monthOf === m), monthOf), dir)
+      // the swap wrote the month as one file unless AQE split it past the
+      // target, so this finds nothing to do. A split month can still read
+      // as fragmented: AQE measures shuffled row bytes, which run larger
+      // than the parquet bytes measured here. It runs here, not in the
+      // pipeline, because the AFFECTED set is the truth: a boundary-date
+      // re-merge can touch a month the pipeline's nominal month doesn't name.
       compactIfFragmented(merged.sparkSession, dir)
     }
   }
@@ -160,7 +197,7 @@ object Writers {
     * table at ~`targetBytes` per file via an atomic swap. At 100 TB this
     * runs per-partition (compact the months that fragmented, not the
     * lake) — pass the partition directory as `path`. */
-  def compact(spark: SparkSession, path: String, targetBytes: Long = 128L << 20): Unit = {
+  def compact(spark: SparkSession, path: String, targetBytes: Long = TargetFileBytes): Unit = {
     // the PATH's filesystem, not the default FS — a lake on s3a:// with a
     // local/HDFS fs.defaultFS would otherwise throw Wrong FS mid-load
     val p = new org.apache.hadoop.fs.Path(path)
@@ -177,7 +214,7 @@ object Writers {
     * Missing paths are a no-op (a month may legitimately lack a gold
     * slice). Meant for PARTITION directories — the per-run unit of IO. */
   def compactIfFragmented(spark: SparkSession, path: String,
-                          targetBytes: Long = 128L << 20): Unit = {
+                          targetBytes: Long = TargetFileBytes): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return

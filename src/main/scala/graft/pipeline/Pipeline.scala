@@ -165,12 +165,13 @@ class Pipeline(spark: SparkSession, lakeRoot: String, rawSource: String => DataF
     gateAndRecord("gold", runId, CheckSuite.goldMonthlySuite(),
       spark.read.parquet(s"$lakeRoot/gold_monthly").drop("rev_month"))
 
-    // finalize: compact this load's staging/bronze month partitions
-    // (dynamic-partition-overwrite writes one file per task). Silver and
-    // the month-grained golds self-compact inside monthScopedDeleteInsert,
-    // which knows the TRUE affected-partition set (a boundary-date
-    // re-merge can touch a month this run's nominal month doesn't name);
-    // vendor/payment are single-dir full rebuilds, already one write.
+    // finalize: check this load's staging/bronze month partitions for
+    // fragmentation. monthOverwrite already writes each month at its
+    // compacted file count, so this normally lists and skips. Silver and
+    // the month-grained golds check inside monthScopedDeleteInsert, which
+    // knows the TRUE affected-partition set (a boundary-date re-merge can
+    // touch a month this run's nominal month doesn't name); vendor/payment
+    // are single-dir full rebuilds, already one write.
     Seq(s"$lakeRoot/staging/pickup_month=$month",
         s"$lakeRoot/bronze/pickup_month=$month")
       .foreach(p => Writers.compactIfFragmented(spark, p))

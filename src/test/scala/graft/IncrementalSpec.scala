@@ -98,6 +98,56 @@ class IncrementalSpec extends SparkSpec {
     assert(spark.read.parquet(path).filter($"k" === "b").select("x").first().getDouble(0) == 9.0)
   }
 
+  test("monthScopedDeleteInsert evaluates incoming once and writes each affected " +
+    "month as one file in one pass") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    val path = tmp() + "/t"
+    def df(rows: Seq[(String, Option[String], Double)]) = rows.toDF("k", "s", "x")
+      .select($"k", $"s".cast("timestamp").as("ts"), $"x")
+    Writers.monthScopedDeleteInsert(None, df(Seq(("a", Some("2024-01-10 00:00:00"), 1.0),
+      ("b", Some("2024-02-01 00:00:00"), 1.0), ("z", Some("2024-03-05 00:00:00"), 1.0))),
+      Seq("k"), "ts", path)
+    def files(m: String) = new java.io.File(s"$path/pickup_month=$m").listFiles()
+      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+      .map(f => (f.getName, f.lastModified())).toSet
+    val marchBefore = files("2024-03")
+    // the batch: replace b on February's first instant, add a row on
+    // January's last instant and a NULL-timestamp row; every evaluation of
+    // the batch counts its rows
+    val batch = df(Seq(("b", Some("2024-02-01 00:00:00"), 2.0),
+      ("c", Some("2024-01-31 23:59:59"), 3.0), ("n", None, 4.0)))
+    val evaluated = spark.sparkContext.longAccumulator("incoming rows")
+    val incoming = spark.createDataFrame(
+      batch.rdd.map { r => evaluated.add(1); r }, batch.schema)
+    val written = new java.util.concurrent.atomic.AtomicLong(0)
+    val listener = new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        Option(t.taskMetrics).foreach(m => written.addAndGet(m.outputMetrics.recordsWritten))
+    }
+    org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Writers.monthScopedDeleteInsert(Some(spark.read.parquet(path)), incoming,
+        Seq("k"), "ts", path)
+      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(evaluated.value == 3L, s"incoming evaluated ${evaluated.value / 3.0} times")
+    val out = spark.read.parquet(path)
+    assert(out.count() == 5)
+    assert(out.filter($"k" === "b").select("x").first().getDouble(0) == 2.0)
+    // affected: January (a kept, c added), February (b replaced), 0000-00 (n);
+    // each is one file, and its rows were written once: no compaction rewrite
+    for (m <- Seq("2024-01", "2024-02", "0000-00"))
+      assert(files(m).size == 1, s"$m: ${files(m).size} data files")
+    assert(written.get() == 4L, s"${written.get()} records written for 4 affected rows")
+    for (m <- Seq("2024-01", "2024-02", "0000-00")) {
+      val before = files(m)
+      Writers.compactIfFragmented(spark, s"$path/pickup_month=$m")
+      assert(files(m) == before, s"$m was compacted again")
+    }
+    assert(files("2024-03") == marchBefore)
+  }
+
   test("corrupt metadata raises instead of silently resetting the cursor") {
     val path = tmp() + "/meta"
     val dir = new java.io.File(path)

@@ -125,7 +125,23 @@ class PipelineSpec extends SparkSpec {
     assert(spark.read.parquet(s"$lake/silver").count() == 3)
     val janFiles = new java.io.File(s"$lake/silver/pickup_month=2024-01")
       .listFiles().map(f => (f.getName, f.lastModified())).toSet
-    assert(p.runOnce(maxRetries = 0) == "2024-02")
+    // the Spark jobs the second month's load submits
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(p.runOnce(maxRetries = 0) == "2024-02")
+      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // 105 jobs while each month-scoped write evaluated its incoming rows
+    // twice and compaction read back and rewrote each fresh partition; 90
+    // with one evaluation and each month written at its final file count
+    assert(jobs.get() <= 90, s"the second month's load submitted ${jobs.get()} Spark jobs")
     assert(spark.read.parquet(s"$lake/silver").count() == 5)
     // the second month's load must NOT rewrite January's silver partition
     val janAfter = new java.io.File(s"$lake/silver/pickup_month=2024-01")
