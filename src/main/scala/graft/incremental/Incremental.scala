@@ -250,7 +250,12 @@ object Writers {
     * partition discovery happily parses as a real partition value —
     * silently double-counting the month on every later read. `_`- and
     * `.`-prefixed paths are invisible to discovery, so an orphaned temp
-    * dir is inert garbage, not phantom data. */
+    * dir is inert garbage, not phantom data.
+    *
+    * The rename is checked: a `false` from `rename` after the delete
+    * would otherwise leave NO table at `path` (a sink then reads "no
+    * stored state" and restarts its counts), so it throws instead and
+    * leaves the complete new table in the temp dir for [[recoverSwap]]. */
   def atomicRewrite(df: DataFrame, path: String): Unit = {
     val dst = new org.apache.hadoop.fs.Path(path)
     val tmp = new org.apache.hadoop.fs.Path(dst.getParent,
@@ -259,7 +264,7 @@ object Writers {
     val fs = dst.getFileSystem(
       df.sparkSession.sparkContext.hadoopConfiguration)
     fs.delete(dst, true)
-    fs.rename(tmp, dst)
+    require(fs.rename(tmp, dst), s"atomicRewrite: rename failed for $tmp -> $dst")
   }
 
   /** Startup recovery for [[atomicRewrite]]'s documented crash window
@@ -269,7 +274,8 @@ object Writers {
     *
     *  - temp present, destination MISSING → the crash hit between
     *    delete and rename; the temp is the complete new table, so
-    *    FINISH the rename ("completed_rename");
+    *    FINISH the rename ("completed_rename"; a rename that returns
+    *    false throws, leaving the temp in place);
     *  - temp present, destination present → the crash hit before the
     *    delete (or during the temp write); the destination is the
     *    intact OLD table and the temp is unfinished — sweep it
@@ -287,7 +293,10 @@ object Writers {
       s"_tmp_${dst.getName}.__graft__")
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(tmp)) "clean"
-    else if (!fs.exists(dst)) { fs.rename(tmp, dst); "completed_rename" }
+    else if (!fs.exists(dst)) {
+      require(fs.rename(tmp, dst), s"recoverSwap: rename failed for $tmp -> $dst")
+      "completed_rename"
+    }
     else { fs.delete(tmp, true); "swept_stale_tmp" }
   }
 }

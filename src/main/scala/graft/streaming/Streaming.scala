@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
 /** Structured-Streaming form of the engine's incremental semantics
@@ -74,6 +74,98 @@ object Streaming {
       }
     fs.delete(tmp, true)
   }
+
+  /** The one foreachBatch driver every sink runs on: `body` gets each
+    * micro-batch with its checkpointed batch id. */
+  private def sink(df: DataFrame, checkpoint: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    df.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(body)
+      .start()
+
+  /** The fenced state step: the replay protocol every state-table sink
+    * commits through. For the state table at `path` and micro-batch
+    * `batchId`, in order:
+    *
+    *  1. read the stored state and test its fence, the max
+    *     `last_batch_id` ([[storedFence]]): a stored fence ≥ `batchId`
+    *     means the batch already applied, and the step does nothing;
+    *  2. build the next state with `next` (given the stored state
+    *     without `last_batch_id`, None when there is none) and stamp it
+    *     `last_batch_id = batchId`;
+    *  3. take ONE eager `localCheckpoint`, so the swap never reads the
+    *     directory it replaces;
+    *  4. run `beforeSwap(stored, next state)`, both without
+    *     `last_batch_id`: the monitors' fenced log append
+    *     ([[appendLog]]), [[joinMaintSink]]'s view partition;
+    *  5. swap the new state in with
+    *     [[graft.incremental.Writers.atomicRewrite]].
+    *
+    * Replay contract. foreachBatch is at-least-once, and merging counts
+    * is not idempotent, so the fence lives INSIDE the state table and
+    * swaps atomically with it. Spark's batch ids grow monotonically per
+    * checkpoint, so the ≥ test suffices. The before-swap effect must be
+    * idempotent on its own: a log append is fenced by the log's own max
+    * `batch_id` ([[appendLogFence]]) and committed by one rename
+    * ([[atomicAppendOne]]); a view partition is an overwrite. Crash
+    * matrix for batch N:
+    *
+    *  - before the effect commits: nothing of N is on disk, and the
+    *    replay runs every step again from the same inputs;
+    *  - after the effect, before the swap: the state fence is < N, so
+    *    the replay re-applies the state exactly once, while the log
+    *    fence (≥ N) skips the append and the view partition is
+    *    rewritten identically;
+    *  - after the swap, before Spark commits its checkpoint: the state
+    *    fence (≥ N) skips the whole step;
+    *  - inside the swap (between delete and rename): the temp dir holds
+    *    the complete new table, and
+    *    [[graft.incremental.Writers.recoverSwap]] finishes the rename
+    *    before the stream restarts.
+    *
+    * `batchId = None` is the same step without the fence, for state
+    * whose merge is idempotent by algebra (SCD2 re-derivation, HLL
+    * register max, Bloom OR): no fence read, no `last_batch_id` column,
+    * and a replayed batch merges to the identical state. */
+  private def swapState(spark: SparkSession, path: String,
+                        batchId: Option[Long])(
+      next: Option[DataFrame] => DataFrame,
+      beforeSwap: (Option[DataFrame], DataFrame) => Unit = (_, _) => ())
+      : Unit = {
+    val stored = graft.sources.Tables.readParquetIfExists(spark, path)
+    if (!batchId.exists(b => storedFence(stored).exists(_ >= b))) {
+      val prior = stored.map(_.drop("last_batch_id"))
+      val state = next(prior)
+      val out = batchId.fold(state)(b => state.withColumn("last_batch_id", lit(b)))
+        .localCheckpoint(true)
+      beforeSwap(prior, out.drop("last_batch_id"))
+      graft.incremental.Writers.atomicRewrite(out, path)
+    }
+  }
+
+  /** The fenced log append, as a [[swapState]] before-swap action:
+    * unless the log at `path` already holds batch `batchId`
+    * ([[appendLogFence]]), append `rows(next state)` stamped with
+    * `batch_id` through [[atomicAppendOne]]. `rows` returning None
+    * appends nothing. */
+  private def appendLog(path: String, batchId: Long)(
+      rows: DataFrame => Option[DataFrame])
+      : (Option[DataFrame], DataFrame) => Unit = (_, state) =>
+    if (!appendLogFence(state.sparkSession, path).exists(_ >= batchId))
+      rows(state).foreach(r =>
+        atomicAppendOne(r.withColumn("batch_id", lit(batchId)), path))
+
+  /** The per-batch directory write of the four `delta-<batchId>` sinks:
+    * each micro-batch writes `delta(batch)` to its own directory, so a
+    * crash-replayed batch overwrites its own delta instead of adding a
+    * second one (idempotence by path, no fence). Readers fold the whole
+    * directory. */
+  private def deltaSink(df: DataFrame, path: String, checkpoint: String)(
+      delta: DataFrame => DataFrame): StreamingQuery =
+    sink(df, checkpoint) { (batch, batchId) =>
+      delta(batch).write.mode(SaveMode.Overwrite).parquet(s"$path/delta-$batchId")
+    }
 
   /** The monitor sinks' merge algebras, exposed as plain BATCH
     * functions: each sink's foreachBatch calls one of these verbatim,
@@ -201,17 +293,12 @@ object Streaming {
     * and batch share one write path, so a micro-batch load is idempotent
     * per key and touches only its affected month partitions. */
   def monthScopedSink(df: DataFrame, keys: Seq[String], tsCol: String,
-                      path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val existing =
-          graft.sources.Tables.readParquetIfExists(batch.sparkSession, path)
-        graft.incremental.Writers.monthScopedDeleteInsert(
-          existing, batch, keys, tsCol, path)
-      }
-      .start()
+                      path: String, checkpoint: String): StreamingQuery =
+    sink(df, checkpoint) { (batch, _) =>
+      graft.incremental.Writers.monthScopedDeleteInsert(
+        graft.sources.Tables.readParquetIfExists(batch.sparkSession, path),
+        batch, keys, tsCol, path)
+    }
 
   /** Continuous corpus admission: each micro-batch of documents is
     * near-dup-deduped against the persisted corpus signature index
@@ -232,22 +319,29 @@ object Streaming {
                          indexPath: String, corpusPath: String,
                          checkpoint: String, shingleSize: Int = 3,
                          bands: Int = 4, rows: Int = 4,
-                         jaccardThreshold: Double = 0.7)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val admitted = graft.llmdata.DedupOps.incrementalDedupIndexed(
-          batch.sparkSession, indexPath, batch, idCol, textCol,
-          shingleSize, bands, rows, jaccardThreshold)
-          .localCheckpoint(true)
-        if (!admitted.isEmpty) {
-          admitted.write.mode("append").parquet(corpusPath)
-          graft.llmdata.DedupOps.signatureAppend(
-            admitted, idCol, textCol, indexPath, shingleSize, bands, rows)
-        }
-      }
-      .start()
+                         jaccardThreshold: Double = 0.7): StreamingQuery =
+    sink(df, checkpoint) { (batch, _) =>
+      admit(batch, idCol, textCol, indexPath, corpusPath, shingleSize, bands,
+        rows, jaccardThreshold)
+    }
+
+  /** The admit-and-append body of [[dedupAdmissionSink]] and
+    * [[curationIngestSink]]: near-dup-dedup `docs` against the stored
+    * signature index, then append the admitted rows to the corpus and
+    * their signatures to the index. */
+  private def admit(docs: DataFrame, idCol: String, textCol: String,
+                    indexPath: String, corpusPath: String, shingleSize: Int,
+                    bands: Int, rows: Int, jaccardThreshold: Double): Unit = {
+    val admitted = graft.llmdata.DedupOps.incrementalDedupIndexed(
+      docs.sparkSession, indexPath, docs, idCol, textCol,
+      shingleSize, bands, rows, jaccardThreshold)
+      .localCheckpoint(true)
+    if (!admitted.isEmpty) {
+      admitted.write.mode("append").parquet(corpusPath)
+      graft.llmdata.DedupOps.signatureAppend(
+        admitted, idCol, textCol, indexPath, shingleSize, bands, rows)
+    }
+  }
 
   /** End-to-end streaming curation: the full ingestion pipeline a
     * training corpus actually runs, composed in admission order inside
@@ -279,39 +373,26 @@ object Streaming {
                          checkpoint: String, minQuality: Double = 0.3,
                          shingleSize: Int = 3, bands: Int = 4,
                          rows: Int = 4, jaccardThreshold: Double = 0.7)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val ss = batch.sparkSession
-        val keep = batch.columns.map(col)
-        val gated = graft.llmdata.TextAnalysis.qualityScore(batch, textCol)
-          .filter(col("quality_score") >= minQuality)
-          .select(keep: _*)
-        val fp = gated.withColumn("fingerprint",
-          graft.llmdata.TextAnalysis.fingerprint(col(textCol)))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("fingerprint")).orderBy(col(idCol))
-        val uniq = fp.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
-        val fresh = graft.sources.Tables.readParquetIfExists(ss, corpusPath)
-          .fold(uniq)(c =>
-            uniq.join(c.select(col("fingerprint")), Seq("fingerprint"), "left_anti"))
-          .localCheckpoint(true)
-        val admitted = graft.llmdata.DedupOps.incrementalDedupIndexed(
-          ss, indexPath, fresh, idCol, textCol,
-          shingleSize, bands, rows, jaccardThreshold)
-          .localCheckpoint(true)
-        if (!admitted.isEmpty) {
-          admitted.write.mode("append").parquet(corpusPath)
-          graft.llmdata.DedupOps.signatureAppend(
-            admitted, idCol, textCol, indexPath, shingleSize, bands, rows)
-        }
-        fresh.unpersist()
-        admitted.unpersist()
-        ()
-      }
-      .start()
+      : StreamingQuery =
+    sink(df, checkpoint) { (batch, _) =>
+      val keep = batch.columns.map(col)
+      val gated = graft.llmdata.TextAnalysis.qualityScore(batch, textCol)
+        .filter(col("quality_score") >= minQuality)
+        .select(keep: _*)
+      val fp = gated.withColumn("fingerprint",
+        graft.llmdata.TextAnalysis.fingerprint(col(textCol)))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("fingerprint")).orderBy(col(idCol))
+      val uniq = fp.withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1).drop("__rn")
+      val fresh = graft.sources.Tables
+        .readParquetIfExists(batch.sparkSession, corpusPath)
+        .fold(uniq)(c =>
+          uniq.join(c.select(col("fingerprint")), Seq("fingerprint"), "left_anti"))
+        .localCheckpoint(true)
+      admit(fresh, idCol, textCol, indexPath, corpusPath, shingleSize, bands,
+        rows, jaccardThreshold)
+    }
 
   /** Continuous ANN-index maintenance — the vector twin of
     * [[dedupAdmissionSink]]: each micro-batch of embeddings is assigned
@@ -331,16 +412,12 @@ object Streaming {
     * between them can re-append a batch on replay (vector ids make
     * replays detectable; a periodic compaction can dedup by id). */
   def ivfAppendSink(df: DataFrame, idCol: String, vecCol: String,
-                    indexPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          graft.llmdata.Similarity.ivfIndexAppend(
-            batch.sparkSession, indexPath, batch, idCol, vecCol)
-      }
-      .start()
+                    indexPath: String, checkpoint: String): StreamingQuery =
+    sink(df, checkpoint) { (batch, _) =>
+      if (!batch.isEmpty)
+        graft.llmdata.Similarity.ivfIndexAppend(
+          batch.sparkSession, indexPath, batch, idCol, vecCol)
+    }
 
   /** Streaming SCD2 maintenance: each micro-batch of dimension updates
     * (keyCol, attrCols..., tsCol) merges into the parquet version-history
@@ -358,27 +435,16 @@ object Streaming {
     */
   def scd2Sink(df: DataFrame, keyCol: String, attrCols: Seq[String],
                tsCol: String, snapshotPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        // Snapshot existence MUST be probed through the Hadoop FS layer
-        // (readParquetIfExists), not java.io.File: on HDFS/S3 a local-file
-        // probe is always false, and "always first batch" + atomicRewrite
-        // would silently replace the accumulated history with one batch.
-        val merged = graft.sources.Tables
-          .readParquetIfExists(spark, snapshotPath) match {
-            case Some(snap) =>
-              graft.incremental.Scd2.merge(snap, batch, keyCol, attrCols, tsCol)
-            case None =>
-              graft.incremental.Scd2.resequence(batch, keyCol, attrCols, tsCol)
-          }
-        // sever lineage from the directory about to be replaced
-        val out = merged.localCheckpoint(true)
-        graft.incremental.Writers.atomicRewrite(out, snapshotPath)
-      }
-      .start()
+      : StreamingQuery =
+    sink(df, checkpoint) { (batch, _) =>
+      // swapState probes the snapshot through the Hadoop FS layer
+      // (readParquetIfExists), not java.io.File: on HDFS/S3 a local-file
+      // probe is always false, and "always first batch" + atomicRewrite
+      // would silently replace the accumulated history with one batch.
+      swapState(batch.sparkSession, snapshotPath, None)(_.fold(
+        graft.incremental.Scd2.resequence(batch, keyCol, attrCols, tsCol))(
+        graft.incremental.Scd2.merge(_, batch, keyCol, attrCols, tsCol)))
+    }
 
   /** Streaming incremental aggregate maintenance — the streaming twin of
     * `operators.AggMerge` (q133): each micro-batch is aggregated into
@@ -388,42 +454,24 @@ object Streaming {
     * the direct aggregate of every event ever seen, REGARDLESS of how
     * the stream was batched — the spec proves two-batch ≡ one-shot.
     *
-    * EXACTLY-ONCE under replay: foreachBatch is at-least-once, and
-    * merging SUM/COUNT partials is NOT idempotent (unlike scd2Sink's
-    * re-derivation), so the sink persists the last-applied `batchId` as a
-    * constant column of the partial table — swapped atomically WITH the
-    * partials — and skips any batch id ≤ the stored one. A batch replayed
-    * after a successful swap but failed checkpoint commit is therefore a
-    * no-op instead of a double count. Spark's batch ids are monotonically
-    * increasing per checkpoint, which makes the ≤ test sufficient.
+    * EXACTLY-ONCE under replay: merging SUM/COUNT partials is NOT
+    * idempotent, so the partials commit through the fenced state step
+    * ([[swapState]]): the last-applied `batchId` rides in the table as
+    * `last_batch_id`, and a batch id ≤ the stored one is a no-op
+    * instead of a double count.
     *
     * At 100 TB: per batch, one delta-sized shuffle plus a |days|-row
     * merge — history is never rescanned. Readers call
     * `AggMerge.finish(spark.read.parquet(path))` (finish drops the
     * bookkeeping column). */
   def aggMergeSink(df: DataFrame, tsCol: String, valCol: String,
-                   path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // Hadoop-FS existence probe (NOT java.io.File — see scd2Sink).
-        val stored = graft.sources.Tables.readParquetIfExists(spark, path)
-        val lastApplied = storedFence(stored)
-        if (!lastApplied.exists(_ >= batchId)) {
-          val delta = graft.operators.AggMerge.dailyPartial(batch, tsCol, valCol)
-          val merged = stored match {
-            case Some(s) => graft.operators.AggMerge.merge(Seq(
-              s.drop("last_batch_id"), delta))
-            case None => delta
-          }
-          val out = merged.withColumn("last_batch_id", lit(batchId))
-            .localCheckpoint(true) // sever lineage pre-swap
-          graft.incremental.Writers.atomicRewrite(out, path)
-        }
+                   path: String, checkpoint: String): StreamingQuery =
+    sink(df, checkpoint) { (batch, batchId) =>
+      swapState(batch.sparkSession, path, Some(batchId)) { stored =>
+        val delta = graft.operators.AggMerge.dailyPartial(batch, tsCol, valCol)
+        stored.fold(delta)(s => graft.operators.AggMerge.merge(Seq(s, delta)))
       }
-      .start()
+    }
 
   /** Streaming CDC maintenance — the streaming driver for
     * `operators.AggMerge.applyCdc` (q164): the stream carries CHANGE
@@ -437,13 +485,12 @@ object Streaming {
     *  2. the fact snapshot at `factPath` — stored minus the batch's
     *     deletes (anti-join on `idCol`) plus its inserts.
     *
-    * Replay safety: both tables carry their own `last_batch_id` fence
-    * (the aggMergeSink bookkeeping), swapped atomically WITH their
-    * contents. The two swaps are NOT mutually atomic; order fixes the
-    * crash contract — partials first (they need the pre-CDC base), so
-    * a crash between swaps replays the batch with the partials fenced
-    * off and only the fact store applying. Either way each table
-    * applies each batch exactly once.
+    * Replay safety: each table commits through its own fenced state
+    * step ([[swapState]]). The two swaps are NOT mutually atomic;
+    * order fixes the crash contract — partials first (they need the
+    * pre-CDC base), so a crash between swaps replays the batch with
+    * the partials fenced off and only the fact store applying. Either
+    * way each table applies each batch exactly once.
     *
     * At 100 TB: partial maintenance is delta-sized (applyCdc's
     * contract); the fact swap here is a whole-snapshot rewrite —
@@ -453,39 +500,25 @@ object Streaming {
   def cdcMaintSink(cdc: DataFrame, idCol: String, tsCol: String,
                    valCol: String, opCol: String,
                    factPath: String, partialsPath: String,
-                   checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    cdc.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val cols = Seq(idCol, tsCol, valCol).map(col)
-        val none = batch.filter(lit(false))
-        val storedFact = graft.sources.Tables.readParquetIfExists(spark, factPath)
-        val storedPart = graft.sources.Tables.readParquetIfExists(spark, partialsPath)
-        def fence(df: Option[DataFrame]): Option[Long] = storedFence(df)
-        val base = storedFact.map(_.drop("last_batch_id"))
-          .getOrElse(none.select(cols: _*))
-        if (!fence(storedPart).exists(_ >= batchId)) {
-          val prev = storedPart.map(_.drop("last_batch_id")).getOrElse(
-            graft.operators.AggMerge.dailyPartial(none, tsCol, valCol))
-          val out = graft.operators.AggMerge
-            .applyCdc(prev, base, batch, idCol, tsCol, valCol, opCol)
-            .withColumn("last_batch_id", lit(batchId))
-            .localCheckpoint(true)
-          graft.incremental.Writers.atomicRewrite(out, partialsPath)
-        }
-        if (!fence(storedFact).exists(_ >= batchId)) {
-          val newFact = base
-            .join(batch.filter(col(opCol) === "delete").select(col(idCol)),
-              Seq(idCol), "left_anti")
-            .unionByName(batch.filter(col(opCol) === "insert").select(cols: _*))
-            .withColumn("last_batch_id", lit(batchId))
-            .localCheckpoint(true)
-          graft.incremental.Writers.atomicRewrite(newFact, factPath)
-        }
+                   checkpoint: String): StreamingQuery =
+    sink(cdc, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val cols = Seq(idCol, tsCol, valCol).map(col)
+      val none = batch.filter(lit(false))
+      // the pre-batch fact snapshot, read before step 2 replaces it
+      val base = graft.sources.Tables.readParquetIfExists(spark, factPath)
+        .map(_.drop("last_batch_id")).getOrElse(none.select(cols: _*))
+      swapState(spark, partialsPath, Some(batchId)) { prev =>
+        graft.operators.AggMerge.applyCdc(
+          prev.getOrElse(graft.operators.AggMerge.dailyPartial(none, tsCol, valCol)),
+          base, batch, idCol, tsCol, valCol, opCol)
       }
-      .start()
+      swapState(spark, factPath, Some(batchId)) { _ =>
+        base.join(batch.filter(col(opCol) === "delete").select(col(idCol)),
+            Seq(idCol), "left_anti")
+          .unionByName(batch.filter(col(opCol) === "insert").select(cols: _*))
+      }
+    }
 
   /** Streaming daily-distinct-count maintenance — [[aggMergeSink]]'s
     * sketch sibling: each micro-batch's keys are HLL-sketched per day
@@ -498,23 +531,14 @@ object Streaming {
     * Per-batch cost: one delta-sized shuffle + a |days|-row union. */
   def distinctMergeSink(df: DataFrame, tsCol: String, keyCol: String,
                         path: String, checkpoint: String,
-                        lgConfigK: Int = 12)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
+                        lgConfigK: Int = 12): StreamingQuery =
+    sink(df, checkpoint) { (batch, _) =>
+      swapState(batch.sparkSession, path, None) { stored =>
         val delta = graft.operators.AggMerge
           .dailyDistinctPartial(batch, tsCol, keyCol, lgConfigK)
-        val merged = graft.sources.Tables.readParquetIfExists(spark, path)
-          match {
-            case Some(s) => graft.operators.AggMerge.mergeDistinct(Seq(s, delta))
-            case None => delta
-          }
-        val out = merged.localCheckpoint(true) // sever lineage pre-swap
-        graft.incremental.Writers.atomicRewrite(out, path)
+        stored.fold(delta)(s => graft.operators.AggMerge.mergeDistinct(Seq(s, delta)))
       }
-      .start()
+    }
 
   /** Streaming exact-quantile maintenance — the quantile member of the
     * mergeable-partial sink family ([[aggMergeSink]] SUM/COUNT,
@@ -532,28 +556,15 @@ object Streaming {
     * Readers: `Profile.quantilesFromCountsBy(
     *   spark.read.parquet(path).drop("last_batch_id"), qs)`. */
   def quantilePartialSink(df: DataFrame, groupCol: String, valueCol: String,
-                          path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val stored = graft.sources.Tables.readParquetIfExists(spark, path)
-        val lastApplied = storedFence(stored)
-        if (!lastApplied.exists(_ >= batchId)) {
-          val delta = graft.operators.Profile
-            .quantilePartialBy(batch, groupCol, valueCol)
-          val merged = stored match {
-            case Some(s) => graft.operators.Profile.mergeQuantilePartialsBy(
-              Seq(s.drop("last_batch_id"), delta))
-            case None => delta
-          }
-          val out = merged.withColumn("last_batch_id", lit(batchId))
-            .localCheckpoint(true) // sever lineage pre-swap
-          graft.incremental.Writers.atomicRewrite(out, path)
-        }
+                          path: String, checkpoint: String): StreamingQuery =
+    sink(df, checkpoint) { (batch, batchId) =>
+      swapState(batch.sparkSession, path, Some(batchId)) { stored =>
+        val delta = graft.operators.Profile
+          .quantilePartialBy(batch, groupCol, valueCol)
+        stored.fold(delta)(s =>
+          graft.operators.Profile.mergeQuantilePartialsBy(Seq(s, delta)))
       }
-      .start()
+    }
 
   /** Streaming heavy-hitter maintenance — the Misra-Gries member of the
     * mergeable-partials sink family (SUM/COUNT: aggMergeSink; distinct:
@@ -569,41 +580,16 @@ object Streaming {
     *   .drop("last_batch_id"), k)`. */
   def heavyHitterSink(df: DataFrame, tsCol: String, itemCol: String,
                       capacity: Int, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val stored = graft.sources.Tables.readParquetIfExists(spark, path)
-        val lastApplied = storedFence(stored)
-        if (!lastApplied.exists(_ >= batchId)) {
-          val delta = graft.functions.MisraGries
-            .dailyTopKPartial(batch, tsCol, itemCol, capacity)
-          val merged = stored match {
-            case Some(s) => graft.functions.MisraGries.mergeTopK(
-              Seq(s.drop("last_batch_id"), delta), capacity)
-            case None => delta
-          }
-          val out = merged.withColumn("last_batch_id", lit(batchId))
-            .localCheckpoint(true) // sever lineage pre-swap
-          graft.incremental.Writers.atomicRewrite(out, path)
-        }
+      : StreamingQuery =
+    sink(df, checkpoint) { (batch, batchId) =>
+      swapState(batch.sparkSession, path, Some(batchId)) { stored =>
+        val delta = graft.functions.MisraGries
+          .dailyTopKPartial(batch, tsCol, itemCol, capacity)
+        stored.fold(delta)(s =>
+          graft.functions.MisraGries.mergeTopK(Seq(s, delta), capacity))
       }
-      .start()
+    }
 
-  /** Streaming EXACT dedup: drop any document whose content fingerprint
-    * ([[graft.llmdata.TextAnalysis.fingerprint]] — md5 of the normalized
-    * text) was already seen within the watermark horizon, using Spark's
-    * own `dropDuplicatesWithinWatermark` state store. The streaming twin
-    * of the batch exact-dedup operator, and the cheap first stage in
-    * front of [[dedupAdmissionSink]]'s near-dup probe: an exact byte
-    * duplicate never reaches the LSH index.
-    *
-    * State is bounded BY THE WATERMARK (fingerprints older than
-    * `lateness` are evicted) — the honest contract for an unbounded
-    * stream: exactness within the horizon, cross-horizon duplicates fall
-    * through to the batch dedup that periodically re-curates the corpus.
-    * Append mode; the first arrival (in processing order) survives. */
   /** Streaming incremental JOIN-view maintenance — the
     * [[graft.incremental.ViewMaint]] delta rule driven by foreachBatch:
     * one interleaved stream carries BOTH sides' inserts (`sideCol` ∈
@@ -633,41 +619,24 @@ object Streaming {
   def joinMaintSink(df: DataFrame, sideCol: String, keys: Seq[String],
                     aCols: Seq[String], bCols: Seq[String],
                     snapPath: String, viewPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        def sideOf(src: DataFrame, side: String, cols: Seq[String]) =
-          src.filter(col(sideCol) === side)
-            .select((keys ++ cols).map(col): _*)
-        val stored = graft.sources.Tables.readParquetIfExists(spark, snapPath)
-        val lastApplied = storedFence(stored)
-        if (!lastApplied.exists(_ >= batchId)) {
-          val (aOld, bOld) = stored match {
-            case Some(s) => (sideOf(s, "a", aCols), sideOf(s, "b", bCols))
-            case None => (sideOf(batch.filter(lit(false)), "a", aCols),
-              sideOf(batch.filter(lit(false)), "b", bCols))
-          }
-          val dA = sideOf(batch, "a", aCols)
-          val dB = sideOf(batch, "b", bCols)
-          // 1. view delta partition (idempotent overwrite, pre-swap)
-          graft.incremental.ViewMaint.joinDelta(aOld, bOld, dA, dB, keys)
+      : StreamingQuery =
+    sink(df, checkpoint) { (batch, batchId) =>
+      val all = (Seq(sideCol) ++ keys ++ aCols ++ bCols).map(col)
+      def sideOf(src: DataFrame, side: String, cols: Seq[String]) =
+        src.filter(col(sideCol) === side).select((keys ++ cols).map(col): _*)
+      swapState(batch.sparkSession, snapPath, Some(batchId))(
+        _.getOrElse(batch.filter(lit(false)).select(all: _*))
+          .unionByName(batch.select(all: _*)),
+        // the view delta partition: an idempotent overwrite computed
+        // from the pre-batch snapshots, written before the swap
+        (stored, _) => {
+          val old = stored.getOrElse(batch.filter(lit(false)))
+          graft.incremental.ViewMaint.joinDelta(
+              sideOf(old, "a", aCols), sideOf(old, "b", bCols),
+              sideOf(batch, "a", aCols), sideOf(batch, "b", bCols), keys)
             .write.mode("overwrite").parquet(s"$viewPath/batch_id=$batchId")
-          // 2. snapshot swap, fenced
-          val newSnap = stored.map(_.drop("last_batch_id")).getOrElse {
-            batch.filter(lit(false)).select(
-              (Seq(sideCol) ++ keys ++ aCols ++ bCols).map(col): _*)
-          }
-          val merged = newSnap
-            .unionByName(batch.select(
-              (Seq(sideCol) ++ keys ++ aCols ++ bCols).map(col): _*))
-            .withColumn("last_batch_id", lit(batchId))
-            .localCheckpoint(true)
-          graft.incremental.Writers.atomicRewrite(merged, snapPath)
-        }
-      }
-      .start()
+        })
+    }
 
   /** Streaming distribution-drift monitor: maintain the stream's
     * cumulative per-category counts (a mergeable COUNT partial with the
@@ -680,45 +649,21 @@ object Streaming {
     * history (per batch: one delta-sized aggregate + a
     * categories-sized merge + a categories-sized TV evaluation).
     *
-    * Replay contract: counts carry `last_batch_id` and swap atomically
-    * (exactly-once under at-least-once foreachBatch). The snapshot
-    * append commits BEFORE the swap under its OWN fence (the log's max
-    * `batch_id` — see [[appendLogFence]]): a crash between the two
-    * replays the batch with the append fenced off and only the swap
-    * re-applying, so neither effect double-applies. A crash MID-append
-    * cannot tear or half-commit the log: appends go through
-    * [[atomicAppendOne]] (temp write + one rename), so the snapshot
-    * for a batch id is either fully present or absent — and an absent
-    * one is re-appended on replay. */
+    * Replay contract: the fenced state step with a fenced log append
+    * ([[swapState]], [[appendLog]]). */
   def driftMonitorSink(df: DataFrame, catCol: String, refCounts: DataFrame,
                        countsPath: String, snapshotsPath: String,
-                       checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val stored = graft.sources.Tables.readParquetIfExists(spark, countsPath)
-        val lastApplied = storedFence(stored)
-        if (!lastApplied.exists(_ >= batchId)) {
+                       checkpoint: String): StreamingQuery =
+    sink(df, checkpoint) { (batch, batchId) =>
+      swapState(batch.sparkSession, countsPath, Some(batchId))(
+        stored => {
           val delta = batch.groupBy(col(catCol).as("category"))
             .agg(count(lit(1)).as("cnt"))
-          val merged = stored match {
-            case Some(s) => mergeCategoryCounts(s.drop("last_batch_id"), delta)
-            case None => delta
-          }
-          val out = merged.withColumn("last_batch_id", lit(batchId))
-            .localCheckpoint(true) // sever lineage pre-swap
-          // append FIRST (own fence), state swap second — see appendLogFence
-          if (!appendLogFence(spark, snapshotsPath).exists(_ >= batchId))
-            graft.checks.Drift
-              .totalVariationFromCounts(refCounts, out.drop("last_batch_id"))
-              .withColumn("batch_id", lit(batchId)) // one-row snapshot
-              .transform { d => atomicAppendOne(d, snapshotsPath); d }
-          graft.incremental.Writers.atomicRewrite(out, countsPath)
-        }
-      }
-      .start()
+          stored.fold(delta)(mergeCategoryCounts(_, delta))
+        },
+        appendLog(snapshotsPath, batchId)(counts => // one-row snapshot
+          Some(graft.checks.Drift.totalVariationFromCounts(refCounts, counts))))
+    }
 
   /** Streaming CUSUM drift alarms: per micro-batch, merge the batch's
     * (key, day) counts into a stored daily table (mergeable-partials
@@ -731,46 +676,26 @@ object Streaming {
     * prefix sums) are handled for free — the merge just updates the day
     * and the next derive sees it.
     *
-    * Exactly-once: counts swap atomically WITH the fence id; the alarm
-    * append commits BEFORE the swap under its own fence (the alarm
-    * log's max `batch_id`, [[appendLogFence]]), so a crash between the
-    * two replays with the append fenced off and only the swap
-    * re-applying — neither effect double-applies, and no committed
-    * append can be lost. Alarm snapshots carry `batch_id`; readers
-    * take the latest (which also supersedes the one residual corner,
-    * a partial append from a mid-append crash). */
+    * Replay contract: the fenced state step with a fenced log append
+    * ([[swapState]], [[appendLog]]). Alarm snapshots carry `batch_id`;
+    * readers take the latest. */
   def cusumSink(df: DataFrame, keyCol: String, tsCol: String,
                 slackMicro: Long, hMicro: Long,
                 countsPath: String, alarmsPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val stored = graft.sources.Tables.readParquetIfExists(spark, countsPath)
-        val lastApplied = storedFence(stored)
-        if (!lastApplied.exists(_ >= batchId)) {
+      : StreamingQuery =
+    sink(df, checkpoint) { (batch, batchId) =>
+      swapState(batch.sparkSession, countsPath, Some(batchId))(
+        stored => {
           val delta = batch
             .groupBy(col(keyCol), to_date(col(tsCol)).as("day"))
             .agg(count(lit(1)).as("cnt"))
-          val merged = stored match {
-            case Some(s) => mergeDailyCounts(s.drop("last_batch_id"), delta, keyCol)
-            case None => delta
-          }
-          val out = merged.withColumn("last_batch_id", lit(batchId))
-            .localCheckpoint(true) // sever lineage pre-swap
-          // append FIRST (own fence), state swap second — see appendLogFence
-          if (!appendLogFence(spark, alarmsPath).exists(_ >= batchId))
-            graft.operators.Timeseries
-              .cusumFromDaily(out.drop("last_batch_id"), keyCol,
-                slackMicro, hMicro)
-              .filter(col("alarm_up") || col("alarm_down"))
-              .withColumn("batch_id", lit(batchId)) // days-scale snapshot
-              .transform { d => atomicAppendOne(d, alarmsPath); d }
-          graft.incremental.Writers.atomicRewrite(out, countsPath)
-        }
-      }
-      .start()
+          stored.fold(delta)(mergeDailyCounts(_, delta, keyCol))
+        },
+        appendLog(alarmsPath, batchId)(counts => Some( // days-scale snapshot
+          graft.operators.Timeseries
+            .cusumFromDaily(counts, keyCol, slackMicro, hMicro)
+            .filter(col("alarm_up") || col("alarm_down")))))
+    }
 
   /** Streaming freshness monitor: per micro-batch, merge each key's
     * MAX event timestamp into a stored watermark table (max is the
@@ -782,50 +707,33 @@ object Streaming {
     * batch. Completes the monitor-sink triangle (distribution drift,
     * CUSUM level drift, freshness lag).
     *
-    * Exactly-once: watermarks swap atomically WITH the fence id; the
-    * snapshot append commits BEFORE the swap under its own fence
-    * ([[appendLogFence]]), so neither effect double-applies on replay
-    * and no committed append can be lost to the swap-append crash
-    * window. Lag is exact integer seconds (pinned-instant arithmetic,
-    * never wall clock — replays stay deterministic). */
+    * Replay contract: the fenced state step with a fenced log append
+    * ([[swapState]], [[appendLog]]). Lag is exact integer seconds
+    * (pinned-instant arithmetic, never wall clock — replays stay
+    * deterministic). */
   def freshnessSink(df: DataFrame, keyCol: String, tsCol: String,
                     maxLagSeconds: Long, marksPath: String,
                     snapshotsPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val stored = graft.sources.Tables.readParquetIfExists(spark, marksPath)
-        val lastApplied = storedFence(stored)
-        if (!lastApplied.exists(_ >= batchId)) {
+      : StreamingQuery =
+    sink(df, checkpoint) { (batch, batchId) =>
+      swapState(batch.sparkSession, marksPath, Some(batchId))(
+        stored => {
           val delta = batch.groupBy(col(keyCol))
             .agg(max(col(tsCol)).as("last_ts"))
-          val merged = stored match {
-            case Some(s) => mergeWatermarks(s.drop("last_batch_id"), delta, keyCol)
-            case None => delta
-          }
-          val out = merged.withColumn("last_batch_id", lit(batchId))
-            .localCheckpoint(true) // sever lineage pre-swap
-          // append FIRST (own fence), state swap second — see appendLogFence
-          val asOfRow = out.agg(max(col("last_ts")).as("__asof")).head
-          if (!asOfRow.isNullAt(0)
-              && !appendLogFence(spark, snapshotsPath).exists(_ >= batchId)) {
-            val asOf = asOfRow.getTimestamp(0)
-            out.drop("last_batch_id")
-              .withColumn("__lag_us",
-                unix_micros(lit(asOf).cast("timestamp"))
-                  - unix_micros(col("last_ts").cast("timestamp")))
-              .withColumn("lag_seconds", expr("__lag_us div 1000000"))
-              .drop("__lag_us")
-              .withColumn("is_stale", col("lag_seconds") > maxLagSeconds)
-              .withColumn("batch_id", lit(batchId)) // key-scale snapshot
-              .transform { d => atomicAppendOne(d, snapshotsPath); d }
-          }
-          graft.incremental.Writers.atomicRewrite(out, marksPath)
-        }
-      }
-      .start()
+          stored.fold(delta)(mergeWatermarks(_, delta, keyCol))
+        },
+        // key-scale snapshot; none while every watermark is NULL
+        appendLog(snapshotsPath, batchId)(marks =>
+          Option(marks.agg(max(col("last_ts"))).head.getTimestamp(0)).map {
+            asOf =>
+              marks.withColumn("__lag_us",
+                  unix_micros(lit(asOf).cast("timestamp"))
+                    - unix_micros(col("last_ts").cast("timestamp")))
+                .withColumn("lag_seconds", expr("__lag_us div 1000000"))
+                .drop("__lag_us")
+                .withColumn("is_stale", col("lag_seconds") > maxLagSeconds)
+          }))
+    }
 
   /** Streaming data-CONTRACT monitor — the fourth monitor sink beside
     * drift (mix), CUSUM (level), and freshness (lag): maintain
@@ -840,45 +748,29 @@ object Streaming {
     * [[graft.operators.Diff.columnDriftReport]] audits in batch — a
     * source silently starting to emit NULLs — within one micro-batch.
     *
-    * Replay contract: identical to [[driftMonitorSink]] — counts swap
-    * atomically with the fence; the snapshot commits FIRST under the
-    * append log's own fence via [[atomicAppendOne]]. */
+    * Replay contract: the fenced state step with a fenced log append
+    * ([[swapState]], [[appendLog]]). */
   def contractMonitorSink(df: DataFrame, cols: Seq[String],
                           refStats: DataFrame, countsPath: String,
                           snapshotsPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val stored = graft.sources.Tables.readParquetIfExists(spark, countsPath)
-        val lastApplied = storedFence(stored)
-        if (!lastApplied.exists(_ >= batchId)) {
+      : StreamingQuery =
+    sink(df, checkpoint) { (batch, batchId) =>
+      swapState(batch.sparkSession, countsPath, Some(batchId))(
+        stored => {
           val delta = columnCountsOf(batch, cols)
-          val merged = stored match {
-            case Some(s) => mergeColumnCounts(s.drop("last_batch_id"), delta)
-            case None => delta
-          }
-          val out = merged.withColumn("last_batch_id", lit(batchId))
-            .localCheckpoint(true) // sever lineage pre-swap
-          // append FIRST (own fence), state swap second
-          if (!appendLogFence(spark, snapshotsPath).exists(_ >= batchId))
-            out.drop("last_batch_id")
-              .join(refStats, Seq("column_name"), "left")
-              .withColumn("null_frac",
-                when(col("n") > 0,
-                  col("n_null").cast("double") / col("n").cast("double")))
-              .withColumn("null_frac_ref",
-                when(col("n_ref") > 0, col("n_null_ref").cast("double")
-                  / col("n_ref").cast("double")))
-              .withColumn("null_frac_delta",
-                col("null_frac") - col("null_frac_ref"))
-              .withColumn("batch_id", lit(batchId)) // k-row snapshot
-              .transform { d => atomicAppendOne(d, snapshotsPath); d }
-          graft.incremental.Writers.atomicRewrite(out, countsPath)
-        }
-      }
-      .start()
+          stored.fold(delta)(mergeColumnCounts(_, delta))
+        },
+        appendLog(snapshotsPath, batchId)(counts => Some( // k-row snapshot
+          counts.join(refStats, Seq("column_name"), "left")
+            .withColumn("null_frac",
+              when(col("n") > 0,
+                col("n_null").cast("double") / col("n").cast("double")))
+            .withColumn("null_frac_ref",
+              when(col("n_ref") > 0, col("n_null_ref").cast("double")
+                / col("n_ref").cast("double")))
+            .withColumn("null_frac_delta",
+              col("null_frac") - col("null_frac_ref")))))
+    }
 
   /** Streaming model-CALIBRATION monitor — the fifth monitor sink
     * beside drift (mix), CUSUM (level), freshness (lag), and contract
@@ -894,39 +786,22 @@ object Streaming {
     * nBins-sized merge + an nBins-sized finish (never a history
     * rescan).
     *
-    * Replay contract: identical to [[driftMonitorSink]] — bins swap
-    * atomically with the fence; the one-row snapshot commits FIRST
-    * under the append log's own fence via [[atomicAppendOne]]. */
+    * Replay contract: the fenced state step with a fenced log append
+    * ([[swapState]], [[appendLog]]). */
   def calibrationMonitorSink(df: DataFrame, scoreCol: String,
                              labelCol: String, nBins: Int,
                              binsPath: String, snapshotsPath: String,
-                             checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val stored = graft.sources.Tables.readParquetIfExists(spark, binsPath)
-        val lastApplied = storedFence(stored)
-        if (!lastApplied.exists(_ >= batchId)) {
+                             checkpoint: String): StreamingQuery =
+    sink(df, checkpoint) { (batch, batchId) =>
+      swapState(batch.sparkSession, binsPath, Some(batchId))(
+        stored => {
           val delta = graft.operators.Profile
             .calibrationBins(batch, scoreCol, labelCol, nBins)
-          val merged = stored match {
-            case Some(s) => mergeBinCounts(s.drop("last_batch_id"), delta)
-            case None => delta
-          }
-          val out = merged.withColumn("last_batch_id", lit(batchId))
-            .localCheckpoint(true) // sever lineage pre-swap
-          // append FIRST (own fence), state swap second
-          if (!appendLogFence(spark, snapshotsPath).exists(_ >= batchId))
-            graft.operators.Profile
-              .eceFromBins(out.drop("last_batch_id"), nBins)
-              .withColumn("batch_id", lit(batchId)) // one-row snapshot
-              .transform { d => atomicAppendOne(d, snapshotsPath); d }
-          graft.incremental.Writers.atomicRewrite(out, binsPath)
-        }
-      }
-      .start()
+          stored.fold(delta)(mergeBinCounts(_, delta))
+        },
+        appendLog(snapshotsPath, batchId)(bins => // one-row snapshot
+          Some(graft.operators.Profile.eceFromBins(bins, nBins))))
+    }
 
   /** Streaming CONFORMAL-INTERVAL monitor — the sixth monitor sink:
     * maintain cumulative distinct-residual counts
@@ -939,41 +814,24 @@ object Streaming {
     * merged lattice each batch (late residuals just merge in; no
     * carried window state to invalidate).
     *
-    * Replay contract: identical to [[driftMonitorSink]] — counts swap
-    * atomically with the fence; the one-row snapshot commits FIRST
-    * under the append log's own fence via [[atomicAppendOne]]. */
+    * Replay contract: the fenced state step with a fenced log append
+    * ([[swapState]], [[appendLog]]). */
   def conformalMonitorSink(df: DataFrame, residualCol: String,
                            alphaNum: Int, alphaDen: Int,
                            countsPath: String, snapshotsPath: String,
-                           checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val stored = graft.sources.Tables.readParquetIfExists(spark, countsPath)
-        val lastApplied = storedFence(stored)
-        if (!lastApplied.exists(_ >= batchId)) {
+                           checkpoint: String): StreamingQuery =
+    sink(df, checkpoint) { (batch, batchId) =>
+      swapState(batch.sparkSession, countsPath, Some(batchId))(
+        stored => {
           val delta = batch.filter(col(residualCol).isNotNull)
             .groupBy(col(residualCol).as("residual"))
             .agg(count(lit(1)).as("cnt"))
-          val merged = stored match {
-            case Some(s) => mergeResidualCounts(s.drop("last_batch_id"), delta)
-            case None => delta
-          }
-          val out = merged.withColumn("last_batch_id", lit(batchId))
-            .localCheckpoint(true) // sever lineage pre-swap
-          // append FIRST (own fence), state swap second
-          if (!appendLogFence(spark, snapshotsPath).exists(_ >= batchId))
-            graft.operators.Eval
-              .conformalQuantileFromCounts(out.drop("last_batch_id"),
-                alphaNum, alphaDen)
-              .withColumn("batch_id", lit(batchId)) // one-row snapshot
-              .transform { d => atomicAppendOne(d, snapshotsPath); d }
-          graft.incremental.Writers.atomicRewrite(out, countsPath)
-        }
-      }
-      .start()
+          stored.fold(delta)(mergeResidualCounts(_, delta))
+        },
+        appendLog(snapshotsPath, batchId)(counts => // one-row snapshot
+          Some(graft.operators.Eval
+            .conformalQuantileFromCounts(counts, alphaNum, alphaDen))))
+    }
 
   /** Streaming SURVIVAL-drift monitor — the seventh monitor sink
     * (drift: mix; CUSUM: level; freshness: lag; contract: nulls;
@@ -994,39 +852,22 @@ object Streaming {
     * — dedup/last-observation upstream; a subject spanning batches
     * must arrive exactly once, the standard survival-table contract.
     *
-    * Replay contract: identical to [[driftMonitorSink]] — cells swap
-    * atomically with the fence; the snapshot commits FIRST under the
-    * append log's own fence via [[atomicAppendOne]]. */
+    * Replay contract: the fenced state step with a fenced log append
+    * ([[swapState]], [[appendLog]]). */
   def survivalMonitorSink(df: DataFrame, keyCol: String,
                           durationCol: String, eventCol: String,
                           cellsPath: String, snapshotsPath: String,
-                          checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val stored = graft.sources.Tables.readParquetIfExists(spark, cellsPath)
-        val lastApplied = storedFence(stored)
-        if (!lastApplied.exists(_ >= batchId)) {
+                          checkpoint: String): StreamingQuery =
+    sink(df, checkpoint) { (batch, batchId) =>
+      swapState(batch.sparkSession, cellsPath, Some(batchId))(
+        stored => {
           val delta = graft.operators.Survival
             .survivalCells(batch, keyCol, durationCol, eventCol)
-          val merged = stored match {
-            case Some(s) => mergeSurvivalCells(s.drop("last_batch_id"), delta)
-            case None => delta
-          }
-          val out = merged.withColumn("last_batch_id", lit(batchId))
-            .localCheckpoint(true) // sever lineage pre-swap
-          // append FIRST (own fence), state swap second
-          if (!appendLogFence(spark, snapshotsPath).exists(_ >= batchId))
-            graft.operators.Survival
-              .kaplanMeierFromCells(out.drop("last_batch_id"), keyCol)
-              .withColumn("batch_id", lit(batchId))
-              .transform { d => atomicAppendOne(d, snapshotsPath); d }
-          graft.incremental.Writers.atomicRewrite(out, cellsPath)
-        }
-      }
-      .start()
+          stored.fold(delta)(mergeSurvivalCells(_, delta))
+        },
+        appendLog(snapshotsPath, batchId)(cells =>
+          Some(graft.operators.Survival.kaplanMeierFromCells(cells, keyCol))))
+    }
 
   /** Streaming Count-Min frequency monitor — the eighth monitor sink
     * (and the unbounded-domain sibling of [[heavyHitterSink]]'s
@@ -1041,44 +882,25 @@ object Streaming {
     * bounded at d·w cells no matter how many distinct items stream
     * by.
     *
-    * Replay contract: identical to [[driftMonitorSink]] — the grid
-    * swaps atomically with the fence; the probes-scale snapshot
-    * commits FIRST under the append log's own fence via
-    * [[atomicAppendOne]]. */
+    * Replay contract: the fenced state step with a fenced log append
+    * ([[swapState]], [[appendLog]]). */
   def cmSketchSink(df: DataFrame, itemCol: String, depth: Int, width: Int,
                    probes: Seq[String], salt: String,
                    gridPath: String, snapshotsPath: String,
-                   checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val stored = graft.sources.Tables.readParquetIfExists(spark, gridPath)
-        val lastApplied = storedFence(stored)
-        if (!lastApplied.exists(_ >= batchId)) {
+                   checkpoint: String): StreamingQuery =
+    sink(df, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      import spark.implicits._
+      swapState(spark, gridPath, Some(batchId))(
+        stored => {
           val delta = graft.functions.CountMin
             .partial(batch, itemCol, depth, width, salt)
-          val merged = stored match {
-            case Some(s) => graft.functions.CountMin.merge(
-              Seq(s.drop("last_batch_id"), delta))
-            case None => delta
-          }
-          val out = merged.withColumn("last_batch_id", lit(batchId))
-            .localCheckpoint(true) // sever lineage pre-swap
-          // append FIRST (own fence), state swap second
-          if (!appendLogFence(spark, snapshotsPath).exists(_ >= batchId)) {
-            import spark.implicits._
-            graft.functions.CountMin
-              .estimate(out.drop("last_batch_id"),
-                probes.toDF("item"), "item", depth, width, salt)
-              .withColumn("batch_id", lit(batchId))
-              .transform { d => atomicAppendOne(d, snapshotsPath); d }
-          }
-          graft.incremental.Writers.atomicRewrite(out, gridPath)
-        }
-      }
-      .start()
+          stored.fold(delta)(s => graft.functions.CountMin.merge(Seq(s, delta)))
+        },
+        appendLog(snapshotsPath, batchId)(grid => // probes-scale snapshot
+          Some(graft.functions.CountMin.estimate(grid, probes.toDF("item"),
+            "item", depth, width, salt))))
+    }
 
   /** Streaming Bloom-membership maintenance (9th monitor sink) — the
     * MEMBERSHIP member of the mergeable-sketch family (HLL distinct:
@@ -1099,23 +921,13 @@ object Streaming {
     * union. */
   def bloomMembershipSink(df: DataFrame, itemCol: String, mBits: Long,
                           k: Int, salt: String, path: String,
-                          checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val delta = graft.functions.Bloom.partial(batch, itemCol, mBits, k,
-          salt)
-        val merged = graft.sources.Tables.readParquetIfExists(spark, path)
-          match {
-            case Some(s) => graft.functions.Bloom.merge(Seq(s, delta))
-            case None => delta
-          }
-        val out = merged.localCheckpoint(true) // sever lineage pre-swap
-        graft.incremental.Writers.atomicRewrite(out, path)
+                          checkpoint: String): StreamingQuery =
+    sink(df, checkpoint) { (batch, _) =>
+      swapState(batch.sparkSession, path, None) { stored =>
+        val delta = graft.functions.Bloom.partial(batch, itemCol, mBits, k, salt)
+        stored.fold(delta)(s => graft.functions.Bloom.merge(Seq(s, delta)))
       }
-      .start()
+    }
 
   /** Streaming lake ingest WITH manifest upkeep — the write path that
     * keeps [[graft.sources.Tables.readPrunedManifest]] honest on a
@@ -1142,17 +954,12 @@ object Streaming {
     * unconditionally. */
   def lakeIngestSink(df: DataFrame, path: String,
                      manifestCols: Seq[String], checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$path/batch-$batchId")
-        graft.sources.Tables.refreshManifest(batch.sparkSession, path,
-          manifestCols)
-        ()
-      }
-      .start()
+      : StreamingQuery =
+    sink(df, checkpoint) { (batch, batchId) =>
+      batch.write.mode(SaveMode.Overwrite).parquet(s"$path/batch-$batchId")
+      graft.sources.Tables.refreshManifest(batch.sparkSession, path,
+        manifestCols)
+    }
 
   /** Streaming lake ingest WITH SNAPSHOT COMMITS — [[lakeIngestSink]]'s
     * time-travel sibling: each micro-batch lands in its own
@@ -1173,17 +980,12 @@ object Streaming {
     * Per-batch cost: the batch write + one listing + one metadata
     * write. */
   def snapshotIngestSink(df: DataFrame, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$path/batch-$batchId")
-        graft.incremental.Snapshots.commitAt(batch.sparkSession, path,
-          batchId + 1)
-        ()
-      }
-      .start()
+      : StreamingQuery =
+    sink(df, checkpoint) { (batch, batchId) =>
+      batch.write.mode(SaveMode.Overwrite).parquet(s"$path/batch-$batchId")
+      graft.incremental.Snapshots.commitAt(batch.sparkSession, path,
+        batchId + 1)
+    }
 
   /** [[snapshotIngestSink]] WITH INLINE MAINTENANCE — the full safe
     * loop (ingest → commit → periodic compaction → time travel) as
@@ -1206,23 +1008,18 @@ object Streaming {
     * pre-compaction files) stays a caller-scheduled decision. */
   def snapshotMaintainSink(df: DataFrame, path: String, checkpoint: String,
                            compactEvery: Int, targetBytes: Long)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     require(compactEvery >= 1, s"compactEvery must be >= 1, got $compactEvery")
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val ingestV = batchId + 1 + batchId / compactEvery
-        batch.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$path/batch-$batchId")
-        graft.incremental.Snapshots.rollback(s, path, ingestV - 1)
-        graft.incremental.Snapshots.commitAt(s, path, ingestV)
-        if ((batchId + 1) % compactEvery == 0)
-          graft.incremental.Snapshots.compactAt(s, path, ingestV + 1,
-            targetBytes)
-        ()
-      }
-      .start()
+    sink(df, checkpoint) { (batch, batchId) =>
+      val s = batch.sparkSession
+      val ingestV = batchId + 1 + batchId / compactEvery
+      batch.write.mode(SaveMode.Overwrite).parquet(s"$path/batch-$batchId")
+      graft.incremental.Snapshots.rollback(s, path, ingestV - 1)
+      graft.incremental.Snapshots.commitAt(s, path, ingestV)
+      if ((batchId + 1) % compactEvery == 0)
+        graft.incremental.Snapshots.compactAt(s, path, ingestV + 1,
+          targetBytes)
+    }
   }
 
   /** Streaming maintenance of the EXACT mergeable quantile partials
@@ -1239,17 +1036,9 @@ object Streaming {
     * count. Per-batch cost: one value-lattice-scale aggregate +
     * write. */
   def quantileDeltaSink(df: DataFrame, tsCol: String, valueCol: String,
-                        path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.AggMerge.dailyValuePartial(batch, tsCol, valueCol)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$path/delta-$batchId")
-        ()
-      }
-      .start()
+                        path: String, checkpoint: String): StreamingQuery =
+    deltaSink(df, path, checkpoint)(
+      graft.operators.AggMerge.dailyValuePartial(_, tsCol, valueCol))
 
   /** Read side of [[quantileDeltaSink]]: fold every delta into one
     * (day, cents, cnt) table. */
@@ -1272,17 +1061,8 @@ object Streaming {
     * (key, day)-scale aggregate + write; the O(series²) fold is paid
     * only at read time over the days-scale merged series. */
   def ewmaDeltaSink(df: DataFrame, keyCol: String, tsCol: String,
-                    path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ewmaDeltaBatch(batch, keyCol, tsCol)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$path/delta-$batchId")
-        ()
-      }
-      .start()
+                    path: String, checkpoint: String): StreamingQuery =
+    deltaSink(df, path, checkpoint)(ewmaDeltaBatch(_, keyCol, tsCol))
 
   /** [[ewmaDeltaSink]]'s exact per-batch body, exposed for fold
     * oracles (the q442 convention). */
@@ -1314,18 +1094,9 @@ object Streaming {
     * State: O(domain/32) longs per key — exactness paid in bounded,
     * known space. */
   def bitmapDistinctSink(df: DataFrame, keyCol: String, idCol: String,
-                         path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.AggMerge.bitmapDistinctPartial(batch, keyCol,
-          idCol)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$path/delta-$batchId")
-        ()
-      }
-      .start()
+                         path: String, checkpoint: String): StreamingQuery =
+    deltaSink(df, path, checkpoint)(
+      graft.operators.AggMerge.bitmapDistinctPartial(_, keyCol, idCol))
 
   /** Read side of [[bitmapDistinctSink]]: OR-fold all deltas, count
     * bits. */
@@ -1350,17 +1121,9 @@ object Streaming {
     * cardinalities and overlaps maintained forever at k rows per
     * segment. */
   def kmvSink(df: DataFrame, groupCol: String, idCol: String, k: Int,
-              path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.functions.Kmv.sketch(batch, Seq(groupCol), idCol, k)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$path/delta-$batchId")
-        ()
-      }
-      .start()
+              path: String, checkpoint: String): StreamingQuery =
+    deltaSink(df, path, checkpoint)(
+      graft.functions.Kmv.sketch(_, Seq(groupCol), idCol, k))
 
   /** Read side of [[kmvSink]]: fold every delta through
     * [[graft.functions.Kmv.merge]] (exact under any fold tree) and
@@ -1412,14 +1175,10 @@ object Streaming {
     * merge + one snapshot-metadata fence read. */
   def wapSink(df: DataFrame, path: String,
               suite: graft.checks.CheckSuite, quarantine: String,
-              checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        wapBatch(batch, batchId, path, suite, quarantine)
-      }
-      .start()
+              checkpoint: String): StreamingQuery =
+    sink(df, checkpoint) { (batch, batchId) =>
+      wapBatch(batch, batchId, path, suite, quarantine)
+    }
 
   /** The [[wapSink]] batch body — exposed for batch-path tests and
     * replay fixtures (the engine convention: every sink's semantics
@@ -1516,17 +1275,25 @@ object Streaming {
     * keys raise in the batch body (one version per op). Per-batch
     * cost: one key-list write + one append — never a rewrite. */
   def upsertSink(df: DataFrame, path: String, keyCols: Seq[String],
-                 checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.incremental.Deletes.upsertAt(batch.sparkSession, path,
-          batch, keyCols, batchId + 1L)
-        ()
-      }
-      .start()
+                 checkpoint: String): StreamingQuery =
+    sink(df, checkpoint) { (batch, batchId) =>
+      graft.incremental.Deletes.upsertAt(batch.sparkSession, path,
+        batch, keyCols, batchId + 1L)
+    }
 
+  /** Streaming EXACT dedup: drop any document whose content fingerprint
+    * ([[graft.llmdata.TextAnalysis.fingerprint]] — md5 of the normalized
+    * text) was already seen within the watermark horizon, using Spark's
+    * own `dropDuplicatesWithinWatermark` state store. The streaming twin
+    * of the batch exact-dedup operator, and the cheap first stage in
+    * front of [[dedupAdmissionSink]]'s near-dup probe: an exact byte
+    * duplicate never reaches the LSH index.
+    *
+    * State is bounded BY THE WATERMARK (fingerprints older than
+    * `lateness` are evicted) — the honest contract for an unbounded
+    * stream: exactness within the horizon, cross-horizon duplicates fall
+    * through to the batch dedup that periodically re-curates the corpus.
+    * Append mode; the first arrival (in processing order) survives. */
   def exactDedupStream(df: DataFrame, tsCol: String, textCol: String,
                        lateness: String): DataFrame =
     df.withColumn("__fp", graft.llmdata.TextAnalysis.fingerprint(col(textCol)))

@@ -224,4 +224,37 @@ class IncrementalSpec extends SparkSpec {
     assert(spark.read.parquet(path).head().getLong(0) == 2L)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(tmpDir)))
   }
+
+  test("atomicRewrite throws when the swap rename fails, keeping the new table in its temp") {
+    spark.sparkContext.hadoopConfiguration.set("fs.noswaprename.impl",
+      classOf[NoSwapRenameFileSystem].getName)
+    val base = tmp()
+    val path = s"noswaprename://$base/t"
+    Seq(1, 2).toDF("x").write.parquet(s"$base/t")
+    val e = intercept[IllegalArgumentException](
+      Writers.atomicRewrite(Seq(7, 8, 9).toDF("x"), path))
+    assert(e.getMessage.contains(s"$base/_tmp_t.__graft__") &&
+      e.getMessage.contains(s"$base/t"), e.getMessage)
+    // the delete ran and the rename did not: the temp dir holds the
+    // complete new table, the one thing left to recover from
+    val tmpDir = s"$base/_tmp_t.__graft__"
+    assert(new java.io.File(s"$tmpDir/_SUCCESS").exists())
+    assert(spark.read.parquet(tmpDir).as[Int].collect().sorted.toSeq == Seq(7, 8, 9))
+    // recovery meets the same failing rename: it throws instead of
+    // reporting "completed_rename", and the temp stays
+    intercept[IllegalArgumentException](Writers.recoverSwap(spark, path))
+    assert(spark.read.parquet(tmpDir).count() == 3L)
+  }
+}
+
+/** A local filesystem under the `noswaprename` scheme whose `rename` of
+  * an atomic-swap temp dir (a name ending `.__graft__`) returns false and
+  * moves nothing, as a rename may on some stores. Every other rename,
+  * Spark's own output commit included, goes through. */
+class NoSwapRenameFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("noswaprename:///")
+  override def getScheme: String = "noswaprename"
+  override def rename(src: org.apache.hadoop.fs.Path,
+                      dst: org.apache.hadoop.fs.Path): Boolean =
+    !src.getName.endsWith(".__graft__") && super.rename(src, dst)
 }

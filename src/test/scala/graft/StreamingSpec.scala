@@ -1173,4 +1173,100 @@ class StreamingSpec extends SparkSpec {
     assert(streamed == batch, s"streamed $streamed vs batch $batch")
     assert(streamed == Set(1L, 3L, 5L, 6L))
   }
+
+  test("a monitor replays the snapshot-committed, swap-lost batch: state " +
+    "applies once, the log keeps one row set") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.commons.io.FileUtils
+    implicit val sqlCtx = spark.sqlContext
+    val dir = Files.createTempDirectory("graft-crashwin").toString
+    val ref = Seq(("id", 4L, 0L), ("tag", 4L, 0L))
+      .toDF("column_name", "n_ref", "n_null_ref")
+    val b0 = Seq((Some(1L), Some("a")), (Some(2L), Some("b")))
+    val b1 = Seq((Some(3L), None), (None, None))
+    def run(ckpt: String)(afterBatch0: => Unit): Unit = {
+      val in = MemoryStream[(Option[Long], Option[String])]
+      val q = Streaming.contractMonitorSink(in.toDF().toDF("id", "tag"),
+        Seq("id", "tag"), ref, dir + "/counts", dir + "/snaps", ckpt)
+      try {
+        in.addData(b0: _*); q.processAllAvailable(); afterBatch0
+        in.addData(b1: _*); q.processAllAvailable()
+      } finally q.stop()
+    }
+    val (counts, saved) = (new java.io.File(dir + "/counts"),
+      new java.io.File(dir + "/counts-after-0"))
+    run(dir + "/ckpt")(FileUtils.copyDirectory(counts, saved))
+    def snaps() = spark.read.parquet(dir + "/snaps")
+      .select("batch_id", "column_name", "n", "n_null").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
+      .sortBy(r => (r._1, r._2)).toSeq
+    val logged = snaps()
+    // the crash: batch 1's snapshot is committed, its state swap is not
+    FileUtils.deleteDirectory(counts)
+    FileUtils.moveDirectory(saved, counts)
+    // drive batch 1 again (a fresh checkpoint restarts ids at 0: batch
+    // 0 meets the state fence, batch 1 meets only the log's fence)
+    run(dir + "/ckpt2")(())
+    val state = spark.read.parquet(dir + "/counts")
+      .select("column_name", "n", "n_null", "last_batch_id").collect()
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
+      .toMap
+    assert(state == Map("id" -> ((4L, 1L, 1L)), "tag" -> ((4L, 2L, 1L))),
+      s"batch 1 must apply to the state exactly once: $state")
+    assert(logged.map(_._1) == Seq(0L, 0L, 1L, 1L))
+    assert(snaps() == logged, "the log must keep exactly one row set per batch")
+  }
+
+  test("delta-directory sinks: two batches plus a replayed batch 0 read " +
+    "back the one-shot answers") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    import graft.functions.Kmv
+    import graft.operators.{AggMerge, Timeseries}
+    val dir = Files.createTempDirectory("graft-deltasinks").toString
+    def ts(d: Int, h: Int) = java.sql.Timestamp.valueOf(f"2024-03-$d%02d $h%02d:00:00")
+    val b0 = Seq(("a", ts(1, 1), 1L, 1.5), ("a", ts(1, 2), 2L, 2.5),
+      ("b", ts(2, 3), 40L, 1.5))
+    val b1 = Seq(("a", ts(2, 4), 2L, 7.25), ("b", ts(2, 5), 41L, 1.5),
+      ("b", ts(3, 6), 99L, 3.0), ("a", ts(3, 7), 70L, 2.5))
+    val sinks = Seq[(String, (org.apache.spark.sql.DataFrame, String) =>
+      org.apache.spark.sql.streaming.StreamingQuery)](
+      "quant" -> ((df, ck) => Streaming.quantileDeltaSink(df, "ts", "v",
+        dir + "/quant", ck)),
+      "ewma" -> ((df, ck) => Streaming.ewmaDeltaSink(df, "k", "ts",
+        dir + "/ewma", ck)),
+      "bitmap" -> ((df, ck) => Streaming.bitmapDistinctSink(df, "k", "id",
+        dir + "/bitmap", ck)),
+      "kmv" -> ((df, ck) => Streaming.kmvSink(df, "k", "id", 8,
+        dir + "/kmv", ck)))
+    def run(ckpt: String, batches: Seq[Seq[(String, java.sql.Timestamp, Long, Double)]]): Unit =
+      sinks.foreach { case (name, start) =>
+        val in = MemoryStream[(String, java.sql.Timestamp, Long, Double)]
+        val q = start(in.toDF().toDF("k", "ts", "id", "v"), s"$ckpt/$name")
+        try batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
+        finally q.stop()
+      }
+    run(dir + "/ckpt", Seq(b0, b1))
+    run(dir + "/ckpt2", Seq(b0)) // replay batch 0: overwrites delta-0
+    sinks.foreach { case (name, _) =>
+      assert(new java.io.File(s"$dir/$name").list().filterNot(_.startsWith("."))
+        .sorted.toSeq == Seq("delta-0", "delta-1"), name)
+    }
+    val all = (b0 ++ b1).toDF("k", "ts", "id", "v")
+    def same(got: org.apache.spark.sql.DataFrame,
+             want: org.apache.spark.sql.DataFrame, what: String): Unit =
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+        s"$what: ${got.collect().toSeq} vs ${want.collect().toSeq}")
+    same(Streaming.readQuantileCounts(spark, dir + "/quant"),
+      AggMerge.dailyValuePartial(all, "ts", "v"), "quantile counts")
+    same(Streaming.readEwma(spark, dir + "/ewma", 0.5),
+      Timeseries.ewma(all.groupBy(col("k").as("key"), to_date(col("ts")).as("day"))
+        .agg(count(lit(1)).as("y")), "key", "day", "y", 0.5), "ewma")
+    same(Streaming.readBitmapDistinct(spark, dir + "/bitmap"),
+      all.groupBy(col("k").as("key"))
+        .agg(countDistinct(col("id")).cast("long").as("n_distinct")),
+      "bitmap distinct")
+    same(Streaming.readKmvEstimate(spark, dir + "/kmv", "k", 8),
+      Kmv.estimate(Kmv.sketch(all, Seq("k"), "id", 8), Seq("k"), 8), "kmv")
+  }
 }
